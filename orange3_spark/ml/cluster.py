@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from orange3_spark.ml.learners import assemble_features
+from orange3_spark.session import local_frame
 
 
 def kmeans(df: DataFrame, features: Sequence[str] = (), *,
@@ -779,8 +780,8 @@ def dbscan(df: DataFrame, id_col: str, features: Sequence[str], *,
                     lbl[p] = min(owners)
         spark = df.sparkSession
         dt = pts.schema["id"].dataType.simpleString()
-        lab_df = spark.createDataFrame(list(lbl.items()),
-                                       f"id {dt}, cluster_id {dt}")
+        lab_df = local_frame(spark, list(lbl.items()),
+                             f"id {dt}, cluster_id {dt}")
         return (pts.select("id")
                 .join(lab_df, "id", "left")
                 .select(F.col("id").alias(id_col),

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from orange3_spark.session import local_frame
+
 
 def knn_graph(df: DataFrame, id_col: str, cols: Sequence[str], *,
               k: int = 5, metric: str = "euclidean") -> DataFrame:
@@ -94,8 +96,8 @@ def label_propagation(edges: DataFrame, *, max_iters: int = 20) -> DataFrame:
             rep[c] = min(rep.get(c, v), v)
         spark = edges.sparkSession
         dt = edges.schema["src"].dataType.simpleString()
-        return spark.createDataFrame(
-            [(v, rep[c]) for v, c in labels_d.items()],
+        return local_frame(
+            spark, [(v, rep[c]) for v, c in labels_d.items()],
             f"id {dt}, community {dt}")
     nodes = (edges.select(F.col("src").alias("id"))
                   .union(edges.select(F.col("dst").alias("id")))
@@ -246,8 +248,8 @@ def louvain(edges: DataFrame, *, weight_col: str = None,
         lab = _louvain_driver(rows, max_levels, max_iters)
         spark = edges.sparkSession
         dt = edges.schema["src"].dataType.simpleString()
-        return spark.createDataFrame(
-            sorted(lab.items()), f"id {dt}, community {dt}")
+        return local_frame(
+            spark, sorted(lab.items()), f"id {dt}, community {dt}")
 
     # ---- distributed path: move phase + contraction per level
     mapping = None        # node -> community across levels

@@ -19,6 +19,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import local_frame
+
 MAX_POINTS = 20_000
 
 #: Lance-Williams coefficients (alpha_i, alpha_j, beta, gamma) as functions
@@ -264,8 +266,8 @@ def heatmap_order(df: DataFrame, id_col: str, cols: Sequence[str], *,
         ids, Z = linkage_from_pairs(pairs, method=method)
         order = leaf_order(ids, Z)
     dt = df.schema[id_col].dataType.simpleString()
-    return df.sparkSession.createDataFrame(
-        [(v, k) for k, v in enumerate(order)],
+    return local_frame(
+        df.sparkSession, [(v, k) for k, v in enumerate(order)],
         f"{id_col} {dt}, leaf_pos int")
 
 
@@ -336,7 +338,7 @@ def hierarchical_clustering(df: DataFrame, id_col: str,
     labels = cut_height(ids, Z, threshold) if threshold is not None \
         else cut(ids, Z, k)
     spark = df.sparkSession
-    lab_df = spark.createDataFrame(
-        [(v, c) for v, c in labels.items()],
+    lab_df = local_frame(
+        spark, [(v, c) for v, c in labels.items()],
         f"{id_col} {df.schema[id_col].dataType.simpleString()}, cluster int")
     return df.select(id_col).join(F.broadcast(lab_df), id_col)

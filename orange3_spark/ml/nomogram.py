@@ -26,6 +26,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import local_frame
+
 NOMOGRAM_QSCALE = 1_000_000_000.0
 
 
@@ -94,5 +96,5 @@ def nb_nomogram(df: DataFrame, attrs: Sequence[str], class_col: str, *,
              .groupBy(F.col(class_col).cast("string").alias("cls"))
              .agg(F.count(F.lit(1)).alias("n"))).collect()}
     rows = nomogram_points_from_counts(cont, freq)
-    return df.sparkSession.createDataFrame(
-        rows, "attr string, value string, cls string, lor_q long")
+    return local_frame(df.sparkSession, rows,
+                       "attr string, value string, cls string, lor_q long")

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import local_frame
+
 MAX_MDS_POINTS = 20_000
 
 
@@ -70,7 +72,7 @@ def mds(df: DataFrame, id_col: str, cols: Sequence[str], *,
     schema = (f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
               + ", ".join(f"mds{c + 1} double"
                           for c in range(coords.shape[1])))
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def _class_moments(df: DataFrame, cols: Sequence[str], class_col: str):
@@ -413,8 +415,8 @@ def tsne(df: DataFrame, id_col: str, cols: Sequence[str] = (), *,
 
     spark = df.sparkSession
     dt = df.schema[id_col].dataType.simpleString()
-    return spark.createDataFrame(
-        [(i, float(y0), float(y1)) for i, (y0, y1) in zip(ids, Y)],
+    return local_frame(
+        spark, [(i, float(y0), float(y1)) for i, (y0, y1) in zip(ids, Y)],
         f"{id_col} {dt}, tsne_x double, tsne_y double")
 
 
@@ -848,8 +850,8 @@ def correspondence_analysis(df: DataFrame, col_a: str, col_b: str, *,
            + [("col", str(v), q(Gm[i, 0]),
                q(Gm[i, 1]) if Gm.shape[1] > 1 else 0)
               for v, i in bi.items()])
-    return df.sparkSession.createDataFrame(
-        out, "kind string, level string, f1_q long, f2_q long")
+    return local_frame(df.sparkSession, out,
+                       "kind string, level string, f1_q long, f2_q long")
 
 
 # --------------------------------------------------------------- isomap
@@ -917,7 +919,8 @@ def isomap(df: DataFrame, id_col: str, *, array_col: str,
     Y = fit_isomap_matrix(X, n_neighbors=n_neighbors,
                           n_components=n_components)
     dt = df.schema[id_col].dataType.simpleString()
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(i, *[float(y) for y in row]) for i, row in zip(ids, Y)],
         f"{id_col} {dt}, " + ", ".join(
             f"iso_{j} double" for j in range(n_components)))

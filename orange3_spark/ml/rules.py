@@ -34,6 +34,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import local_frame
+
 __all__ = ["Rule", "cn2_induce", "rules_to_dataframe", "cn2_predict",
            "contingency_cube", "cn2_unordered_induce", "cn2_sd_induce",
            "induce_unordered_from_cube", "induce_sd_from_cube",
@@ -292,9 +294,9 @@ def rules_to_dataframe(spark, rules: Sequence[Rule]) -> DataFrame:
              str(r.prediction), float(r.quality), int(r.covered),
              int(r.correct))
             for i, r in enumerate(rules)]
-    return spark.createDataFrame(
-        rows, "rule_idx int, conditions string, prediction string, "
-              "laplace double, covered bigint, correct bigint")
+    return local_frame(
+        spark, rows, "rule_idx int, conditions string, prediction string, "
+                     "laplace double, covered bigint, correct bigint")
 
 
 def cn2_predict(df: DataFrame, rules: Sequence[Rule],
@@ -607,6 +609,6 @@ def sd_rules_to_dataframe(spark, sd_rules: Sequence[tuple]) -> DataFrame:
              int(math.floor(Fraction(tot) * SD_WEIGHT_QSCALE + half)),
              int(math.floor(Fraction(top) * SD_WEIGHT_QSCALE + half)))
             for i, (sels, cls, q, tot, top) in enumerate(sd_rules)]
-    return spark.createDataFrame(
-        rows, "rule_idx int, conditions string, prediction string, "
-              "wracc_q bigint, wcovered_q bigint, wcorrect_q bigint")
+    return local_frame(
+        spark, rows, "rule_idx int, conditions string, prediction string, "
+                     "wracc_q bigint, wcovered_q bigint, wcorrect_q bigint")

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import local_frame
+
 #: total rank mass, in fixed-point "parts" — ranks sum to ≤ this
 TOTAL = 10**12
 
@@ -89,8 +91,9 @@ def pagerank_frame(edges: DataFrame, *, src: str = "src",
     stays cached, exposed as ``result.pagerank_cache`` — unpersist it
     when done (mirrors the ``bpe_cache`` convention in text/bpe.py).
     On the bounded local-twin path (≤ ``local_max_edges`` edge rows,
-    default :data:`PR_LOCAL_EDGES`) the result is a literal frame and
-    ``pagerank_cache`` is ``None`` — nothing stays cached."""
+    default :data:`PR_LOCAL_EDGES`) the result is an Arrow-backed
+    ``LocalRelation`` and ``pagerank_cache`` is ``None`` — nothing stays
+    cached."""
     from pyspark import StorageLevel
 
     raw = (edges.select(F.col(src).cast("string").alias("src"),
@@ -123,7 +126,8 @@ def pagerank_frame(edges: DataFrame, *, src: str = "src",
                 iterations=iterations, damping_pct=damping_pct,
                 total=total)
             raw.unpersist()
-            out = edges.sparkSession.createDataFrame(
+            out = local_frame(
+                edges.sparkSession,
                 [(str(nd), int(rk)) for nd, rk in zip(uniq, rank)],
                 "node string, rank long")
             out.pagerank_cache = None
@@ -215,7 +219,7 @@ def pagerank_topk(edges: DataFrame, *, k: int = 20, src: str = "src",
     """Top-``k`` nodes by rank (ties broken by node id — ranks are
     exact integers, so the cut is deterministic).  Persists the edge
     frame for the iteration loop and unpersists before returning a
-    small literal frame."""
+    small Arrow-backed ``LocalRelation``."""
     spark = edges.sparkSession
     handles: list = []
     try:
@@ -228,6 +232,6 @@ def pagerank_topk(edges: DataFrame, *, k: int = 20, src: str = "src",
     finally:
         for h in handles:
             h.unpersist()
-    return spark.createDataFrame(
-        [(r["node"], int(r["rank"])) for r in top],
+    return local_frame(
+        spark, [(r["node"], int(r["rank"])) for r in top],
         "node string, rank long")

@@ -21,6 +21,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from orange3_spark.session import local_frame
+
 
 def with_row_index(df: DataFrame, name: str = "_rn", *,
                    order_by: Optional[Sequence[Column]] = None) -> DataFrame:
@@ -46,8 +48,8 @@ def with_row_index(df: DataFrame, name: str = "_rn", *,
         running += cnt
     # offsets ride in as a broadcast equi-join (a literal CASE chain would
     # bloat codegen at thousands of partitions)
-    off_df = df.sparkSession.createDataFrame(
-        [(int(pid), int(o)) for pid, o in offsets.items()],
+    off_df = local_frame(
+        df.sparkSession, [(int(pid), int(o)) for pid, o in offsets.items()],
         "_pid int, _off long")
     w = Window.partitionBy("_pid").orderBy("_mid")
     return (part.join(F.broadcast(off_df), "_pid")

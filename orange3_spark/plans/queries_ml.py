@@ -11,7 +11,7 @@ from orange3_spark.ml import evaluation as E
 from orange3_spark.ml import learners as L
 from orange3_spark.plans import oracle_replay as OR
 from orange3_spark.plans.registry import query
-from orange3_spark.session import load_tables
+from orange3_spark.session import load_tables, local_frame
 
 
 def _t(spark, sf_dir, *names):
@@ -78,7 +78,7 @@ def q_ml_majority_ca(spark, sf_dir):
     train, test = E.train_test_split(orders, "o_orderkey", 0.25)
     model = L.majority_learner(train, "o_orderpriority")
     acc = E.ca(model.predict(test), label="o_orderpriority")
-    return spark.createDataFrame([(acc,)], "ca double")
+    return local_frame(spark, [(acc,)], "ca double")
 
 
 @query("q_ml_ols", f"""
@@ -98,8 +98,8 @@ def q_ml_ols(spark, sf_dir):
     train, test = E.train_test_split(orders, "o_orderkey", 0.25)
     m = L.ols_learner(train, ["o_custkey"], "o_totalprice")
     r = E.rmse(m.predict(test), label="o_totalprice")
-    return spark.createDataFrame(
-        [(m.intercept, m.coefficients[0], r)],
+    return local_frame(
+        spark, [(m.intercept, m.coefficients[0], r)],
         "intercept double, slope double, rmse_test double")
 
 
@@ -135,7 +135,7 @@ def q_ml_knn_ca(spark, sf_dir):
     pred = model.predict(test).withColumn(
         "prediction", F.col("prediction").cast("int"))
     acc = E.ca(pred, label="label")
-    return spark.createDataFrame([(acc,)], "ca double")
+    return local_frame(spark, [(acc,)], "ca double")
 
 
 @query("q_ml_kmeans", f"""
@@ -238,8 +238,8 @@ def q_ml_pca(spark, sf_dir):
     cols = ["l_quantity", "l_extendedprice"]
     z = _standardize(li.select(*cols), cols)
     _, _, ratios = C.pca_cov_eigen(z, cols, n_components=2)
-    return spark.createDataFrame(
-        [(i + 1, float(round(r, 6))) for i, r in enumerate(ratios)],
+    return local_frame(
+        spark, [(i + 1, float(round(r, 6))) for i, r in enumerate(ratios)],
         "component int, explained_variance_ratio double")
 
 
@@ -266,9 +266,9 @@ def q_ml_cv_ols(spark, sf_dir):
     quality-asserted in pytest (logistic regression: ``tests/test_ml.py``)."""
     (orders,) = _t(spark, sf_dir, "orders")
     rows = E.cv_ols(orders, "o_orderkey", 3, ["o_custkey"], "o_totalprice")
-    return spark.createDataFrame(
-        [(r["fold"], r["intercept"], r["coefficients"][0], r["rmse"])
-         for r in rows],
+    return local_frame(
+        spark, [(r["fold"], r["intercept"], r["coefficients"][0], r["rmse"])
+                for r in rows],
         "fold int, intercept double, slope double, rmse double")
 
 
@@ -362,7 +362,7 @@ def q_ml_auc(spark, sf_dir):
         (F.col("o_orderpriority") == "1-URGENT").cast("double").alias("y"),
         F.col("o_totalprice").alias("score"))
     a = E.auc(scored, label="y", score_col="score")
-    return spark.createDataFrame([(a,)], "auc double")
+    return local_frame(spark, [(a,)], "auc double")
 
 
 @query("q_ml_scores_table", f"""
@@ -404,9 +404,9 @@ def q_ml_scores_table(spark, sf_dir):
         (F.col("o_orderpriority") == "1-URGENT").cast("int").alias("y"),
         (F.col("o_totalprice") > thr).cast("int").alias("prediction"))
     s = E.classification_scores(scored, positive=1, label="y")
-    return spark.createDataFrame(
-        [(s["ca"], s["precision"], s["recall"], s["f1"], s["mcc"],
-          s["specificity"])],
+    return local_frame(
+        spark, [(s["ca"], s["precision"], s["recall"], s["f1"], s["mcc"],
+                 s["specificity"])],
         "ca double, precision double, recall double, f1 double, "
         "mcc double, specificity double")
 
@@ -439,8 +439,8 @@ def q_ml_shuffle_split(spark, sf_dir):
     scores = E.shuffle_split_ols(orders, "o_orderkey", ["o_custkey"],
                                  "o_totalprice", n_resamples=3,
                                  test_size=0.25)
-    return spark.createDataFrame(
-        [(i, s) for i, s in enumerate(scores)],
+    return local_frame(
+        spark, [(i, s) for i, s in enumerate(scores)],
         "resample int, rmse double").orderBy("resample")
 
 
@@ -561,8 +561,8 @@ def q_ml_lda(spark, sf_dir):
     j = fisher_criterion(d, ["x", "y"], "cls")
     jr = round(j, int(5 - math.floor(math.log10(abs(j))))) if j else 0.0
     counts = dict(d.groupBy("cls").count().collect())
-    return spark.createDataFrame(
-        [(jr, counts.get(0, 0), counts.get(1, 0))],
+    return local_frame(
+        spark, [(jr, counts.get(0, 0), counts.get(1, 0))],
         "j_fisher double, n0 long, n1 long")
 
 
@@ -587,8 +587,8 @@ def q_ml_cur(spark, sf_dir):
     from orange3_spark.ml.projection import cur_column_leverage
     (li,) = _t(spark, sf_dir, "lineitem")
     ranked = cur_column_leverage(li, ["l_discount", "l_tax"], rank=1)
-    return spark.createDataFrame(
-        [(c, float(round(v, 6))) for c, v in ranked],
+    return local_frame(
+        spark, [(c, float(round(v, 6))) for c, v in ranked],
         "column string, leverage double")
 
 
@@ -692,8 +692,8 @@ def q_ml_pls(spark, sf_dir):
     m = pls_regression(li, ["l_quantity", "l_discount"], "l_extendedprice",
                        n_components=1)
     r = E.rmse(m.predict(li), label="l_extendedprice")
-    return spark.createDataFrame(
-        [(m.coefficients[0], m.coefficients[1], m.intercept, r)],
+    return local_frame(
+        spark, [(m.coefficients[0], m.coefficients[1], m.intercept, r)],
         "coef_quantity double, coef_discount double, "
         "intercept double, rmse double")
 
@@ -740,8 +740,8 @@ def q_ml_curvefit(spark, sf_dir):
     a, b, c = m.parameters
     # LAPACK vs the oracle's Cramer's rule diverge at ~1e-9 relative through
     # this solve; 4-decimal HALF_UP rounding on both sides is the tolerance.
-    out = spark.createDataFrame(
-        [(a, b, c, r)],
+    out = local_frame(
+        spark, [(a, b, c, r)],
         "p_const double, p_lin double, p_quad double, rmse double")
     # + 0.0 collapses −0.0 for coefficients rounding to zero (a sub-5e-5
     # quadratic term with engine-dependent sign — r8 signed-zero lesson)
@@ -925,8 +925,9 @@ def q_ml_logreg_cv(spark, sf_dir):
                                         / max(r["n_test"], 1)))
         out.append((r["fold"], r["n_test"], round(maj, 4),
                     bool(r["ca"] >= maj - tol)))
-    return spark.createDataFrame(
-        out, "fold int, n_test bigint, majority_share double, ca_ok boolean")
+    return local_frame(
+        spark, out,
+        "fold int, n_test bigint, majority_share double, ca_ok boolean")
 
 
 @query("q_outlier_iforest", OR.iforest_oracle)
@@ -1084,7 +1085,7 @@ def q_ml_silhouette(spark, sf_dir):
     assigned.lloyd_cache.unpersist()   # score is a scalar — release the fit
     import math
     s6 = math.floor(s * 1000000.0 + 0.5) / 1000000.0
-    return spark.createDataFrame([(4, s6)], "k bigint, silhouette double")
+    return local_frame(spark, [(4, s6)], "k bigint, silhouette double")
 
 
 @query("q_ml_adaboost", OR.adaboost_oracle)
@@ -1246,8 +1247,8 @@ def q_ml_stack(spark, sf_dir):
     data.unpersist()
     rmse = math.sqrt(float(int(agg["q"]))
                      / float(int(agg["n"]))) / 10000.0
-    return spark.createDataFrame(
-        [(int(agg["n"]), float(mi), float(w0), float(w1), float(rmse))],
+    return local_frame(
+        spark, [(int(agg["n"]), float(mi), float(w0), float(w1), float(rmse))],
         "n_rows bigint, meta_intercept double, w0 double, w1 double, "
         "rmse double")
 
@@ -1348,8 +1349,8 @@ def q_ml_knn_reg(spark, sf_dir):
     data.unpersist()
     rmse = math.sqrt(float(int(agg["q"]))
                      / float(int(agg["n"]))) / 10.0
-    return spark.createDataFrame(
-        [(int(agg["n"]), int(agg["q"]), float(rmse))],
+    return local_frame(
+        spark, [(int(agg["n"]), int(agg["q"]), float(rmse))],
         "n_test bigint, qerr_sum bigint, rmse double")
 
 
@@ -1402,8 +1403,8 @@ def q_ml_mlp_reg(spark, sf_dir):
     data.unpersist()
     rmse = math.sqrt(float(int(agg["q"])) / OR.MLP_QSCALE
                      / float(int(agg["n"])))
-    return spark.createDataFrame(
-        [(int(agg["n"]), int(agg["q"]), float(rmse))],
+    return local_frame(
+        spark, [(int(agg["n"]), int(agg["q"]), float(rmse))],
         "n_test bigint, qerr_sum bigint, rmse double")
 
 
@@ -1481,7 +1482,7 @@ def q_ml_ari(spark, sf_dir):
                              k=8, n_iter=2)
     ari = adjusted_rand_index(clustered, "cluster", "label")
     clustered.lloyd_cache.unpersist()
-    return spark.createDataFrame([(8, float(ari))], "k bigint, ari double")
+    return local_frame(spark, [(8, float(ari))], "k bigint, ari double")
 
 
 @query("q_ml_logreg_irls", OR.logreg_irls_oracle)
@@ -1630,7 +1631,7 @@ def q_permutation_importance(spark, sf_dir):
         .na.drop(subset=["l_quantity", "l_discount", "l_tax"]))
     rows = permutation_importance_ols(
         d, "id", ["l_discount", "l_tax"], "l_quantity", n_perm=3)
-    return spark.createDataFrame(rows, "label string, r2_q long")
+    return local_frame(spark, rows, "label string, r2_q long")
 
 
 @query("q_heatmap_order", OR.heatmap_order_oracle)

@@ -12,7 +12,7 @@ from orange3_spark.plans.registry import query
 from orange3_spark.preprocess import discretize as D
 from orange3_spark.preprocess import score as SC
 from orange3_spark.preprocess import transform as P
-from orange3_spark.session import load_tables
+from orange3_spark.session import load_tables, local_frame
 
 
 def _t(spark, sf_dir, *names):
@@ -188,8 +188,8 @@ def q_entropy_mdl_bins(spark, sf_dir):
     res = D.entropy_mdl_first_split(li, "l_quantity", "l_returnflag")
     cut, gain, accept = res
     gr = round(gain, int(5 - math.floor(math.log10(abs(gain))))) if gain else 0.0
-    return spark.createDataFrame(
-        [(float(cut), float(gr), bool(accept))],
+    return local_frame(
+        spark, [(float(cut), float(gr), bool(accept))],
         "cut double, gain double, accepted boolean")
 
 
@@ -292,7 +292,8 @@ def q_feature_scores(spark, sf_dir):
         li, ["l_quantity", "l_discount"], "l_extendedprice")
     for feat in ("l_quantity", "l_discount"):
         rows.append((feat, "univar_lin", sig6(uni[feat])))
-    return spark.createDataFrame(rows, "feature string, scorer string, score double")
+    return local_frame(spark, rows,
+                       "feature string, scorer string, score double")
 
 
 @query("q_discretize_timewidth", """
@@ -445,9 +446,9 @@ def q_adaptive_normalize(spark, sf_dir):
             F.sum((F.col(col) >= 0.5).cast("long")).alias("hi")).first()
         rows.append((col, branch, int(st["lo"]), int(st["mid"]),
                      int(st["hi"])))
-    return spark.createDataFrame(
-        rows, "col_name string, branch string, n_low long, "
-              "n_mid long, n_high long")
+    return local_frame(
+        spark, rows, "col_name string, branch string, n_low long, "
+                     "n_mid long, n_high long")
 
 
 # SelectRandomFeatures: the seeded draw is a pure function of the column

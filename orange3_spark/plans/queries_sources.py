@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from orange3_spark.plans import oracle_replay as OR2
 from orange3_spark.plans.registry import query
-from orange3_spark.session import load_tables
+from orange3_spark.session import load_tables, local_frame
 
 
 def _t(spark, sf_dir, *names):
@@ -244,7 +244,7 @@ def q_infer_types(spark, sf_dir):
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         out = list(pool.map(_probe, probes.items()))
-    return spark.createDataFrame(out, "col string, vtype string")
+    return local_frame(spark, out, "col string, vtype string")
 
 
 # ----------------------------------------------------- §2.2 domain editing
@@ -289,7 +289,7 @@ def q_purge_domain(spark, sf_dir):
         F.lit(None).cast("double").alias("null_col"))
     purged = purge_domain(noisy)
     cols = sorted(c.strip("`") for c in purged.columns)
-    return spark.createDataFrame([(c,) for c in cols], "col string")
+    return local_frame(spark, [(c,) for c in cols], "col string")
 
 
 # ------------------------------------------------------------ §2.3 filters
@@ -508,8 +508,8 @@ def q_select_best(spark, sf_dir):
     ).where(F.col("y").isNotNull())
     best = select_best_features(feat, ["f_bucket", "f_pri", "f_year"], "y",
                                 scorer=info_gain, k=2)
-    return spark.createDataFrame(
-        [(i + 1, f) for i, f in enumerate(best)], "rank long, feature string")
+    return local_frame(spark, [(i + 1, f) for i, f in enumerate(best)],
+                       "rank long, feature string")
 
 
 @query("q_impute_asvalue", """
@@ -731,9 +731,9 @@ def q_feature_scores_relieff(spark, sf_dir):
     scores = relieff(li, ["l_quantity", "l_discount", "l_tax"],
                      "l_returnflag", n_samples=150, quantize=100.0)
     import math
-    return spark.createDataFrame(
-        sorted((c, math.floor(v * 1000000.0 + 0.5) / 1000000.0)
-               for c, v in scores.items()),
+    return local_frame(
+        spark, sorted((c, math.floor(v * 1000000.0 + 0.5) / 1000000.0)
+                      for c, v in scores.items()),
         "feature string, score double")
 
 
@@ -761,8 +761,8 @@ def q_scoring_sheet(spark, sf_dir):
                                   num_decision_params=P["num_decision_params"],
                                   max_points=P["max_points"])
     rows = [(f, float(round(t, 6)), int(p)) for f, t, p in model.sheet]
-    return spark.createDataFrame(
-        rows, "feature string, threshold double, points long")
+    return local_frame(
+        spark, rows, "feature string, threshold double, points long")
 
 
 @query("q_filter_hasclass", """

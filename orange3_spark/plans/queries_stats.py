@@ -9,7 +9,7 @@ from orange3_spark.operators import rowagg, sample as S, window as W
 from orange3_spark.operators.reshape import split_column, transpose
 from orange3_spark.plans import oracle_replay as OR2
 from orange3_spark.plans.registry import query
-from orange3_spark.session import load_tables
+from orange3_spark.session import load_tables, local_frame
 from orange3_spark.stats.basic import pearson_pairs, spearman_pairs
 
 
@@ -456,8 +456,8 @@ def q_sketch_cms(spark, sf_dir):
     true = (tok.where(F.col("tok").isin(*_CMS_PROBES))
             .groupBy(F.col("tok").alias("item"))
             .agg(F.count(F.lit(1)).alias("true_n")))
-    items = docs.sparkSession.createDataFrame(
-        [(i,) for i in _CMS_PROBES], "item string")
+    items = local_frame(
+        docs.sparkSession, [(i,) for i in _CMS_PROBES], "item string")
     return (items.join(est, "item", "left").join(true, "item", "left")
             .select("item",
                     F.coalesce("cms_n", F.lit(0)).cast("long")

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from orange3_spark.plans import oracle_replay as OR2
 from orange3_spark.plans.queries_ml import lloyd_cte
 from orange3_spark.plans.registry import query
-from orange3_spark.session import load_tables
+from orange3_spark.session import load_tables, local_frame
 from orange3_spark.similarity import knn as K
 from orange3_spark.text import analysis as TA
 from orange3_spark.text import dedup as TD
@@ -1191,8 +1191,8 @@ def q_bpe_vocab(spark, sf_dir):
     (docs,) = _t(spark, sf_dir, "documents")
     merges, words = bpe_fit(docs, n_merges=8)
     words.bpe_cache.unpersist()        # merges are collected constants
-    return spark.createDataFrame(
-        [(r, a, b, a + b, c) for r, a, b, c in merges],
+    return local_frame(
+        spark, [(r, a, b, a + b, c) for r, a, b, c in merges],
         "rank int, left_sym string, right_sym string, merged string, "
         "cnt long")
 

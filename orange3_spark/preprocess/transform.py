@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from orange3_spark.session import local_frame
+
 
 # ------------------------------------------------------- transformation kernels
 
@@ -206,8 +208,9 @@ def create_instance(df: DataFrame, method: str = "mean", *,
         exprs = [agg(c).alias(c) if c in numeric else F.mode(c).alias(c)
                  for c in df.columns]
         row = df.agg(*exprs).first().asDict()
-    return df.sparkSession.createDataFrame([tuple(row.get(c) for c in df.columns)],
-                                           df.select(*df.columns).schema)
+    return local_frame(df.sparkSession,
+                       [tuple(row.get(c) for c in df.columns)],
+                       df.select(*df.columns).schema)
 
 
 def normalize(df: DataFrame, columns: Sequence[str], *,

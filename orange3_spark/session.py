@@ -223,6 +223,75 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def _internal_arrow_type(dt):
+    """Arrow type of ``dt.toInternal`` output: dates are int32 days and
+    timestamps int64 µs since the epoch, nested types recurse, every
+    other type is its plain Spark→Arrow mapping."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        return pa.int64()
+    if isinstance(dt, T.DateType):
+        return pa.int32()
+    if isinstance(dt, T.ArrayType):
+        return pa.list_(_internal_arrow_type(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return pa.map_(_internal_arrow_type(dt.keyType),
+                       _internal_arrow_type(dt.valueType))
+    if isinstance(dt, T.StructType):
+        return pa.struct([(f.name, _internal_arrow_type(f.dataType))
+                          for f in dt.fields])
+    return to_arrow_type(dt)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-computed rows as an Arrow-backed ``LocalRelation``.
+
+    ``spark.createDataFrame(<python rows>, schema)`` ships the rows as a
+    pickled Python RDD, so every later action on the frame runs a
+    Python-worker job (~0.25 s at any row count).  This builds one
+    ``pyarrow.Table`` instead, which Spark plans as a ``LocalRelation``:
+    collecting it runs no job at all.
+
+    ``rows`` are tuples/lists/``Row``s (positional) or dicts (by field
+    name); ``schema`` is a DDL string or a ``StructType``.  Semantics match
+    the list path:
+
+      * every row passes the same ``_make_type_verifier`` check, so a
+        wrong-typed value (``1.5`` into ``bigint``, ``2**40`` into
+        ``int``) raises instead of Arrow silently truncating it;
+      * columns are built straight from Python values — no pandas, which
+        would turn a float ``NaN`` into NULL;
+      * every value goes through its Spark type's ``toInternal``, as on
+        the list path, so dates and timestamps arrive as days / µs since
+        the epoch: an aware ``datetime`` lands on the same UTC instant
+        and a naive one is read in the same local zone.
+    """
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    if not isinstance(schema, T.StructType):
+        raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
+    verify = T._make_type_verifier(schema)
+    cols: list[list] = [[] for _ in schema.fields]
+    for row in rows:
+        verify(row)
+        if isinstance(row, dict):
+            row = [row.get(n) for n in schema.names]
+        for col, f, v in zip(cols, schema.fields, row):
+            col.append(f.dataType.toInternal(v))
+    arrays = [pa.array(col, type=_internal_arrow_type(f.dataType))
+              .cast(to_arrow_type(f.dataType))
+              for col, f in zip(cols, schema.fields)]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, names=schema.names), schema)
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load fixtures and register them as temp views for spark.sql use."""
     dfs = load_tables(spark, sf_dir)

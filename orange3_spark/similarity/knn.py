@@ -14,22 +14,13 @@ vector + a single scan; the Neighbors widget (``owneighbors.py``) is exactly
 
 from __future__ import annotations
 
-import weakref
 from typing import Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Driver-local centroid rows for centroid tables ivf_fit built from
-# driver data, keyed WEAKLY by the DataFrame object — a side table, not
-# a monkey-patched attribute (r9 advisor: private attributes silently
-# vanish on transformation/persistence and future DataFrame proxies may
-# reject them).  A table this cache misses (externally built, or a
-# transformed descendant) falls back to one collect in _cent_rows —
-# correct either way, the cache only saves the job.
-_CENT_ROWS_CACHE: "weakref.WeakKeyDictionary[DataFrame, list]" = (
-    weakref.WeakKeyDictionary())
+from orange3_spark.session import local_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -189,8 +180,8 @@ def neardup_cosine_matmul(df: DataFrame, threshold: float = 0.95, *,
 
     first = df.select(vec_col).first()
     if first is None:
-        return df.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, score double")
+        return local_frame(
+            df.sparkSession, [], "id_a long, id_b long, score double")
     dim = len(first[0])
     n = df.count()
     if n * dim > max_broadcast_cells:
@@ -286,11 +277,12 @@ def _lsh_buckets_udf(planes_tables, dim: int):
     ``concat_ws(':', t, lsh_signature(v, planes))`` projection —
     BIT-IDENTICAL strings: each plane projection is the ordered
     acc = acc + v[d]·plane[d] fold (float32→double casts are exact),
-    ``proj >= 0`` sets the plane's bit (NaN compares false, exactly as
-    the JVM), and rows whose length ≠ dim (or NULL rows) get signature
-    0 in every table — the value the JVM form produces when ``zip_with``
-    pads the short side with NULLs and ``when(NULL >= 0)`` falls through
-    to 0 for every bit."""
+    ``proj >= 0`` sets the plane's bit (a NaN projection sets it too:
+    Spark orders NaN above every number, so the JVM's ``NaN >= 0`` is
+    true — hence ``~(acc < 0)``), and rows whose length ≠ dim (or NULL
+    rows) get signature 0 in every table — the value the JVM form
+    produces when ``zip_with`` pads the short side with NULLs and
+    ``when(NULL >= 0)`` falls through to 0 for every bit."""
     import numpy as np
 
     pmats = [np.asarray(p, dtype=np.float64) for p in planes_tables]
@@ -310,7 +302,7 @@ def _lsh_buckets_udf(planes_tables, dim: int):
                     acc = np.zeros(X.shape[0], dtype=np.float64)
                     for d in range(dim):
                         acc = acc + X[:, d] * P[i, d]
-                    s |= np.where(acc >= 0.0, np.int64(1 << i),
+                    s |= np.where(~(acc < 0.0), np.int64(1 << i),
                                   np.int64(0))
                 sigs[t, ok] = s
         return pd.Series(
@@ -511,11 +503,8 @@ def ivf_fit(data: DataFrame, *, vec_col: str = "embedding",
            for r in rows}
     spark = data.sparkSession
     local = [(i, got.get(i, c)) for i, c in enumerate(cents0)]
-    cents = spark.createDataFrame(local, "cluster int, cvec array<bigint>")
-    # the table was built from driver-local data — register it so
-    # probe_cells never pays a collect job to read back what the
-    # driver already holds (k×dim ints, the same bound broadcast has)
-    _CENT_ROWS_CACHE[cents] = local
+    # an Arrow LocalRelation: probe_cells reads it back with no Spark job
+    cents = local_frame(spark, local, "cluster int, cvec array<bigint>")
     return assigned, cents
 
 
@@ -539,12 +528,9 @@ def probe_cells_udf(cents: DataFrame, nprobe: int):
 
 
 def _cent_rows(cents: DataFrame):
-    """(cluster, cvec) tuples sorted by cluster — from the
-    ``_CENT_ROWS_CACHE`` entry the fit registered (zero Spark jobs) or
-    one collect for externally-built centroid tables."""
-    local = _CENT_ROWS_CACHE.get(cents)
-    if local is not None:
-        return sorted((int(c), list(v)) for c, v in local)
+    """(cluster, cvec) tuples sorted by cluster.  A centroid table
+    :func:`ivf_fit` built is a ``LocalRelation``, so this collect runs
+    no Spark job."""
     return sorted((int(r["cluster"]), list(r["cvec"]))
                   for r in cents.collect())
 
@@ -977,8 +963,8 @@ def hard_negatives(df: DataFrame, *, id_col: str = "vec_id",
     first = base.select(array_col).first()
     if first is None:
         dt = df.schema[id_col].dataType.simpleString()
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} {dt}, neg_id {dt}, score double")
+        return local_frame(
+            df.sparkSession, [], f"{id_col} {dt}, neg_id {dt}, score double")
     dim = len(first[0])
     n = base.count()
     if n * dim > max_broadcast_cells:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from orange3_spark.ml.cluster import LLOYD_SCALE, quantize_array
+from orange3_spark.session import local_frame
 
 
 def _assign_codes_udf(cents):
@@ -240,8 +241,8 @@ def ivfpq_topk(df: DataFrame, query_vec: Sequence[float], *, id_col: str,
                                        k=n_cells, n_iter=n_iter,
                                        quantize=quantize)
     spark = df.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, [int(x) for x in c]) for i, c in enumerate(cells)],
+    cent_df = local_frame(
+        spark, [(i, [int(x) for x in c]) for i, c in enumerate(cells)],
         "cluster int, cv array<long>")
     res = (assigned.join(F.broadcast(cent_df), "cluster")
            .select(id_col, "cluster",

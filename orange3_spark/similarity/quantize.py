@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from orange3_spark.session import local_frame
+
 
 def quantize_int8_codes(df: DataFrame, *, id_col: str = "vec_id",
                         array_col: str = "embedding") -> DataFrame:
@@ -91,8 +93,8 @@ def random_projection(df: DataFrame, *, id_col: str = "vec_id",
         first = df.select(F.size(array_col).alias("n")).first()
         in_dim = int(first["n"])
     spark = df.sparkSession
-    W = spark.createDataFrame(rp_matrix(in_dim, out_dim, seed=seed),
-                              "i int, j int, wq long")
+    W = local_frame(spark, rp_matrix(in_dim, out_dim, seed=seed),
+                    "i int, j int, wq long")
     x = (df.select(F.col(id_col),
                    F.posexplode(F.col(array_col).cast("array<double>"))
                    .alias("i", "xv"))

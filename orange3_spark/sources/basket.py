@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orange3_spark.session import local_frame
+
 
 def read_basket(spark: SparkSession, path: str) -> DataFrame:
     """``(row_id, key, value)`` rows; bare items get value 1.0."""
@@ -55,8 +57,8 @@ def basket_to_sparse_vectors(long_df: DataFrame, dim: int | None = None,
                 long_df.select("key").distinct().orderBy("key").collect()]
     dim = dim or len(keys)
     spark = long_df.sparkSession
-    idx_df = spark.createDataFrame(
-        [(k, i) for i, k in enumerate(keys)], "key string, _idx int")
+    idx_df = local_frame(
+        spark, [(k, i) for i, k in enumerate(keys)], "key string, _idx int")
     agg = (long_df.join(F.broadcast(idx_df), "key")
            .groupBy("row_id")
            .agg(F.sort_array(

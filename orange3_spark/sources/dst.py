@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from orange3_spark.session import local_frame
+
 
 def read_dst(spark: SparkSession, path: str,
              max_cells: int = 4_000_000) -> DataFrame:
@@ -106,7 +108,7 @@ def read_dst(spark: SparkSession, path: str,
                 r.append(col_labels[j])
             r.append(matrix[i][j])
             rows.append(tuple(r))
-    out = spark.createDataFrame(rows, schema)
+    out = local_frame(spark, rows, schema)
     out.dst_meta = {"n": n, "axis": axis, "symmetric": symmetric}
     return out
 
@@ -264,7 +266,7 @@ def read_dst_xlsx(spark: SparkSession, path: str, *,
             v = M[i, j]
             r.append(None if np.isnan(v) else float(v))
             rows.append(tuple(r))
-    out = spark.createDataFrame(rows, schema)
+    out = local_frame(spark, rows, schema)
     out.dst_meta = {"n_rows": int(n_rows), "n_cols": int(n_cols),
                     "symmetricized": did_sym}
     return out

@@ -27,6 +27,8 @@ from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, SparkSession
 
+from orange3_spark.session import local_frame
+
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL_NS = ("{http://schemas.openxmlformats.org/officeDocument/2006/"
            "relationships}")
@@ -209,6 +211,6 @@ def read_xlsx(spark: SparkSession, path: str, *,
         used.add(n)
         names[i] = n
     data = [tuple(r.get(j) for j in range(width)) for r in grid[1:]]
-    raw = spark.createDataFrame(
-        data, ", ".join(f"`{n}` string" for n in names))
+    raw = local_frame(
+        spark, data, ", ".join(f"`{n}` string" for n in names))
     return infer_and_type(raw)

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from orange3_spark.session import local_frame
+
 
 def basic_stats(df: DataFrame, columns: Optional[Sequence[str]] = None) -> DataFrame:
     """One row per column: min, max, mean, var, nans, non_nans.
@@ -332,8 +334,8 @@ def _feature_statistics_hist(df: DataFrame, cols: "list[str]",
         mode = min(v for v, cnt in ok if cnt == best_cnt)
         out_rows.append((c, n_all, miss, len(ok), mean, sd,
                          mn, mx, med, mode))
-    return df.sparkSession.createDataFrame(
-        out_rows,
+    return local_frame(
+        df.sparkSession, out_rows,
         "variable string, n bigint, n_missing bigint, n_distinct bigint, "
         "mean double, stddev double, min double, max double, "
         "median double, mode double")
@@ -458,8 +460,8 @@ def feature_statistics(df: DataFrame, columns: Sequence[str], *,
                 int(row[f"dist_{i}"]), mean, sd,
                 row[f"min_{i}"], row[f"max_{i}"], med)
 
-    base = df.sparkSession.createDataFrame(
-        [_row(i, c) for i, c in enumerate(cols)],
+    base = local_frame(
+        df.sparkSession, [_row(i, c) for i, c in enumerate(cols)],
         "variable string, n bigint, n_missing bigint, n_distinct bigint, "
         "mean double, stddev double, min double, max double, median double")
     return base.join(modes, "variable", "left")

@@ -25,6 +25,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import local_frame
+
 
 def _standardize(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     stats = df.agg(*[F.avg(c).alias(f"mu_{c}") for c in cols],
@@ -293,8 +295,8 @@ def _spearman_cols_driver(spark, rows, cols, absolute: bool) -> DataFrame:
         for ia, ib in sab:
             sab[(ia, ib)] += n * rks[ia] * rks[ib]
 
-    return spark.createDataFrame(
-        _spearman_pairs_finish(tot, s, ss, sab, cols, absolute),
+    return local_frame(
+        spark, _spearman_pairs_finish(tot, s, ss, sab, cols, absolute),
         "col_a string, col_b string, dist double")
 
 
@@ -428,7 +430,8 @@ def spearman_column_distances(df: DataFrame, cols: Sequence[str], *,
     ss = [int(row[f"ss|{c}"]) for c in cols]
     sab = {(ia, ib): int(row[f"sab|{cols[ia]}|{cols[ib]}"])
            for ia, ib in combinations(range(k), 2)}
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         _spearman_pairs_finish(tot, s, ss, sab, list(cols), absolute),
         "col_a string, col_b string, dist double")
 

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from orange3_spark.session import local_frame
+
 #: KMV hashes are the first 8 md5 hex digits → uniform on [0, 2³²)
 _KMV_SPACE = 1 << 32
 
@@ -263,7 +265,7 @@ def bloom_probe(table: DataFrame, items: Sequence[str], *,
     probes = [(it, int(hashlib.md5(f"{d}|{it}".encode()).hexdigest()[:8],
                        16) % bits)
               for it in items for d in range(depth)]
-    pr = spark.createDataFrame(probes, "item string, bucket long")
+    pr = local_frame(spark, probes, "item string, bucket long")
     hits = (pr.join(table.withColumn("set_", F.lit(1)), "bucket", "left")
             .groupBy("item")
             .agg(F.sum(F.coalesce(F.col("set_"), F.lit(0)))
@@ -312,7 +314,7 @@ def quantile_from_bins(table: DataFrame, ps: Sequence[float], *,
     branch decisions are integer comparisons; the interpolation is one
     fixed float expression of exact integers."""
     spark = table.sparkSession
-    pdf = spark.createDataFrame([(float(p),) for p in ps], "p double")
+    pdf = local_frame(spark, [(float(p),) for p in ps], "p double")
     w_cum = (Window.partitionBy("g").orderBy("bin")
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cum = (table.withColumn("cum", F.sum("n").over(w_cum))
@@ -344,7 +346,7 @@ def cms_point_estimates(table: DataFrame, items: Sequence[str], *,
         for d in range(depth):
             h = int(hashlib.md5(f"{d}|{it}".encode()).hexdigest()[:8], 16)
             probes.append((it, d, h % width))
-    pr = spark.createDataFrame(probes, "item string, lane int, bucket int")
+    pr = local_frame(spark, probes, "item string, lane int, bucket int")
     return (pr.join(table, ["lane", "bucket"], "left")
             .groupBy("item")
             .agg(F.min(F.coalesce(F.col("n"), F.lit(0)))

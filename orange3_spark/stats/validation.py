@@ -25,6 +25,8 @@ from typing import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import local_frame
+
 PSI_QSCALE = 1_000_000_000.0
 
 
@@ -39,8 +41,8 @@ def validate(df: DataFrame, rules: Mapping[str, Column]) -> DataFrame:
             .cast("long").alias(name))
     r = df.agg(*aggs).first()
     rows = [(name, int(r["_n"]), int(r[name])) for name in rules]
-    return df.sparkSession.createDataFrame(
-        rows, "rule string, n_rows long, n_violations long")
+    return local_frame(
+        df.sparkSession, rows, "rule string, n_rows long, n_violations long")
 
 
 def psi_from_counts(counts_a: list[int], counts_b: list[int]) -> float:

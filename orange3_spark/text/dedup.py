@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import local_frame
 from orange3_spark.text.analysis import tokens
 
 
@@ -440,7 +441,7 @@ def dup_clusters(pairs: DataFrame, *, max_iters: int = 20,
         spark = pairs.sparkSession
         dt = pairs.schema["id_a"].dataType.simpleString()
         p2.unpersist()
-        return spark.createDataFrame(rows, f"doc_id {dt}, cluster_id {dt}")
+        return local_frame(spark, rows, f"doc_id {dt}, cluster_id {dt}")
 
     # both directions, derived from the MATERIALIZED pair cache — the
     # union here only re-reads cached rows, and it drives every round

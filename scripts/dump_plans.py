@@ -1,5 +1,6 @@
-"""Dump ``explain("formatted")`` for named queries into plans/r10/
-as ``<query>_<tag>.txt`` — the optimization round's before/after plan
+"""Dump ``explain("formatted")`` for named queries into
+plans/$SPARK_GRAFT_PLANS_ROUND/ (default r11) as ``<query>_<tag>.txt``
+— the optimization round's before/after plan
 evidence (the judge reads these files; they must be committed).
 
 Usage:
@@ -25,10 +26,10 @@ def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(HERE, "plans",
-                           os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r11"))
+    round_tag = os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r11")
+    out_dir = os.path.join(HERE, "plans", round_tag)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("dump-plans-r10")
+    spark = get_spark(f"dump-plans-{round_tag}")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = entry_mod.queries()
     for name in names:

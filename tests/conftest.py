@@ -79,3 +79,9 @@ def assert_matches_oracle(spark_df, ddb_con, sql):
     g, w = normalize(got, got_cols), normalize(want, want_cols)
     assert len(g) == len(w), f"row count {len(g)} vs {len(w)}"
     assert g == w
+
+
+def plan_leaves(df) -> set:
+    """Node names of the leaves of ``df``'s analyzed logical plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {leaves.apply(i).nodeName() for i in range(leaves.size())}

@@ -12,6 +12,7 @@ from orange3_spark.operators.filters import (
 from orange3_spark.operators.merge import MergeError, merge
 from orange3_spark.operators import reshape as R
 from orange3_spark.operators import sample as SA
+from tests.conftest import plan_leaves
 
 
 @pytest.fixture(scope="module")
@@ -385,9 +386,11 @@ def test_pagerank_fixed_point_deterministic_and_dangling(spark):
         rk.pagerank_cache.unpersist()
     # the bounded local twin (default path at this size) is the Pregel
     # loop's exact-integer equal — same ranks, bit for bit
-    rl = {x["node"]: x["rank"]
-          for x in pagerank_frame(edges, iterations=3).collect()}
+    twin = pagerank_frame(edges, iterations=3)
+    rl = {x["node"]: x["rank"] for x in twin.collect()}
     assert rl == r
+    # the twin's result is an Arrow LocalRelation, not a Python RDD
+    assert plan_leaves(twin) == {"LocalRelation"}
     top = pagerank_topk(edges, k=2, iterations=3).collect()
     assert [t["node"] for t in top] == ["hub", "a"]  # tie a<b broken by id
 

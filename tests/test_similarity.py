@@ -383,3 +383,55 @@ def test_hard_negatives_auto_valve(spark):
     assert any("max_cell_rows" in str(x.message) for x in w)
     # queries are never dropped: every vector still gets negatives
     assert len({r["vec_id"] for r in got}) == 410
+
+
+def test_probe_cells_on_fresh_centroids_runs_no_job(spark):
+    """ivf_fit's centroid table is an Arrow LocalRelation, so the
+    collect probe_cells makes of it starts no Spark job."""
+    from orange3_spark.ml.cluster import quantize_array
+    from orange3_spark.similarity.knn import ivf_fit, probe_cells
+    from tests.conftest import plan_leaves
+
+    rows = [(i, [float((i * 37) % 11), float((i * 53) % 7), 1.0])
+            for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assigned, cents = ivf_fit(df, n_cells=4, n_iter=2)
+    assert plan_leaves(cents) == {"LocalRelation"}
+    q = df.select("vec_id", quantize_array(F.col("embedding")).alias("qv"))
+    sc = spark.sparkContext
+    group = "probe-cells-no-job"
+    sc.setJobGroup(group, group)
+    try:
+        for max_cells in (10 ** 9, 0):       # JVM path, Arrow path
+            probe_cells(q, cents, 2, id_col="vec_id",
+                        jvm_max_cells_dim=max_cells)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assigned.unpersist()
+
+
+def test_lsh_buckets_udf_matches_jvm_signature_with_nan(spark):
+    """The pandas-UDF bucket twin sets a plane's bit exactly where the
+    JVM ``F.when(dot >= 0, 1 << i)`` does — also for NaN projections,
+    which Spark orders above every number (``NaN >= 0`` is true)."""
+    from orange3_spark.similarity.knn import (_lsh_buckets_udf, hyperplanes,
+                                              lsh_signature)
+
+    nan = float("nan")
+    dim, n_planes = 4, 6
+    planes = [hyperplanes(dim, n_planes, 42 + 7919 * t) for t in range(2)]
+    rows = [(0, [1.0, -2.0, 0.5, 3.0]), (1, [nan, 1.0, 1.0, 1.0]),
+            (2, [nan] * dim), (3, [0.0] * dim), (4, [-1.0, nan, -1.0, 2.0]),
+            (5, [-3.0, 1.0, -2.0, -1.0])]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    jvm = F.array(*[F.concat_ws(":", F.lit(str(t)),
+                                lsh_signature("v", p).cast("string"))
+                    for t, p in enumerate(planes)])
+    got = {r["id"]: (list(r["u"]), list(r["j"])) for r in df.select(
+        "id", _lsh_buckets_udf(planes, dim)(F.col("v")).alias("u"),
+        jvm.alias("j")).collect()}
+    for i, (udf_sig, jvm_sig) in got.items():
+        assert udf_sig == jvm_sig, (i, udf_sig, jvm_sig)
+    all_bits = (1 << n_planes) - 1
+    assert got[2][0] == [f"{t}:{all_bits}" for t in range(2)]
