@@ -41,50 +41,38 @@ def entry(spark: SparkSession) -> DataFrame:
 # every registered query within ~5 rounds and staleness stays bounded
 # without hand-curated lists.
 _CHANGED_THIS_ROUND = [
-    # r10 OPTIMIZATION round: every query whose engine path materially
-    # changed regrades first (their old verdicts cover dead code).  The
-    # optimization pass (OPTIMIZATION_r10.md) rewrote these paths with
-    # structurally-proven-equivalent fast paths — all locally
-    # oracle-green, but the driver grade is the hard signal:
-    # contingency-cube CN2 (ml/rules.py)
-    "q_ml_cn2", "q_ml_cn2_depth2",
-    # lazy Platt calibration (ml/scoringsheet.py)
-    "q_scoring_sheet",
-    # IRLS column layout + bounded local-twin fast path (ml/learners.py)
-    "q_ml_logreg_irls", "q_quality_classifier",
-    # shared scoring UDF column layout + scan spreading
-    # (ml/outlier_models.py, neural.py, svr.py)
-    "q_outlier_ocsvm", "q_outlier_iforest", "q_ml_mlp_reg",
-    # id-only LSH candidate shuffle (similarity/knn.py)
-    "q_neardup_cosine_scaled", "q_neardup_cosine",
-    # SOM bounded local-twin fast path (ml/projection.py)
-    "q_ml_som",
-    # bounded-vocab local BPE merge rounds (text/bpe.py)
-    "q_bpe_vocab", "q_bpe_tokenize",
-    # --- carried from the r10 build phase (paths changed there) ---
-    # joint-frame + capped-driver-path rewrite of column Spearman
-    # (stats/distance.py, the r9 2.4x regression fix)
-    "q_distance_spearman_cols",
-    # r10 candidate-volume auto-valve in the default mining path
-    # (similarity/knn.py max_cell_rows="auto"; graded data is uniform so
-    # results are unchanged — regrade proves it)
+    # Every registered query whose bounded local twin now fetches through
+    # session.fetch_local (one limit(cap+1).toArrow() job, Arrow tables
+    # instead of Rows/pandas, one shared cap) regrades first.
+    # Lloyd k-means twin (ml/cluster.py kmeans_lloyd_fit)
+    "q_ml_kmeans", "q_ml_ari", "q_cluster_curation", "q_dedup_semantic",
+    "q_ann_recall", "q_ann_incremental", "q_knn_ivf",
     "q_hard_negatives_blocked",
-    # r9-advisor multimodal fixes: per-video-track WebM block counting,
-    # legal duplicate-packet continuity in MPEG-TS (+ r10 stuck-CC fix)
-    "q_media_webm_meta", "q_media_ts_meta",
-    # r10 TIFF widening: tiled storage, 16-bit samples, Deflate — the
-    # encode matrix rotates through the new paths, same pixel oracle
-    "q_media_decode_tiff",
-    # r10 12-bit JPEG: the shared DCT decode path changed (SOF parse
-    # precision admit, frame tuple, DC category 16, _reconstruct level
-    # shift/fold) — every query through _parse_jpeg regrades, plus the
-    # classifier scope change.  Head exceeds the verdict's ≤5 ONLY
-    # because these paths materially changed (build phase + optimization
-    # phase): 22 head + the 30-query r3/r4 tail = 52 vs the ~50-slot
-    # window, so ~2 of the oldest-green tail may carry to r11 — the
-    # 252/252 local sweep at HEAD is the backstop for those.
-    "q_media_decode_jpeg", "q_media_decode_jpeg_prog",
-    "q_media_decode_jpeg420", "q_media_gate_fraction",
+    # Lloyd + exact silhouette twins (ml/cluster.py silhouette_exact)
+    "q_ml_silhouette",
+    # PQ codebook twin (similarity/pq.py), with the IVF Lloyd fit
+    "q_pq_codes", "q_pq_adc", "q_ivfpq",
+    # IRLS logistic-regression twin (ml/learners.py logistic_irls)
+    "q_ml_logreg_irls", "q_quality_classifier",
+    # SOM twin (ml/projection.py som_fit): no count job before the fetch
+    "q_ml_som",
+    # pagerank twin (operators/graph.py): no count/persist before the fetch
+    "q_pagerank",
+    # cv_logreg twin (ml/evaluation.py): no count job before the fetch
+    "q_ml_logreg_cv",
+    # permutation-importance twin (ml/permutation.py): no persist/count
+    "q_permutation_importance",
+    # feature-statistics histogram twin (stats/basic.py)
+    "q_feature_statistics",
+    # CN2 contingency-cube twin (ml/rules.py)
+    "q_ml_cn2", "q_ml_cn2_depth2",
+    # column-Spearman driver finish (stats/distance.py)
+    "q_distance_spearman_cols",
+    # BPE merge-round twin (text/bpe.py): no count job before the fetch
+    "q_bpe_vocab", "q_bpe_tokenize",
+    # not a twin: the LSH norm/dot UDFs now return NULL for a NULL
+    # element and NaN for a NaN one, like the JVM folds (similarity/knn.py)
+    "q_neardup_cosine", "q_neardup_cosine_scaled",
 ]
 
 

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from orange3_spark.ml.learners import assemble_features
-from orange3_spark.session import local_frame
+from orange3_spark.session import arrow_matrix, fetch_local, local_frame
 
 
 def kmeans(df: DataFrame, features: Sequence[str] = (), *,
@@ -120,15 +120,8 @@ def rightsize_persist(qdf: DataFrame, *, rows_per_task: int = 50_000,
     return qdf.persist(StorageLevel.MEMORY_AND_DISK), n_rows
 
 
-#: bounded-frame cap for the Lloyd local twin (n_rows·dim cells and a
-#: row cap for the probe's limit) — the r10 rounds' shared 4M-cell size
-#: class (fit_logistic_irls / som_fit / cv_logreg twins)
-LLOYD_LOCAL_CELLS = 4_000_000
-LLOYD_LOCAL_ROWS = 65_536
-
-
-def _lloyd_local_rounds(prows, id_col: str, k: int, n_iter: int):
-    """The Lloyd iteration loop run on a probe-fetched row list — the
+def _lloyd_local_rounds(tbl, id_col: str, k: int, n_iter: int):
+    """The Lloyd iteration loop run on a fetched Arrow table — the
     distributed loop's LOCAL TWIN, bit-identical by construction: ``_q``
     is already Spark-quantized, init is the k smallest ids (same
     ``orderBy(id).take(k)`` rule), assignment is the same
@@ -143,10 +136,10 @@ def _lloyd_local_rounds(prows, id_col: str, k: int, n_iter: int):
 
     import numpy as np
 
-    srt = sorted(prows, key=lambda r: r[id_col])
-    centroids = [[int(x) for x in r["_q"]] for r in srt[:k]]
+    X = arrow_matrix(tbl.column("_q"), np.int64)
+    ids = tbl.column(id_col).to_pylist()
+    centroids = X[sorted(range(len(ids)), key=ids.__getitem__)[:k]].tolist()
     dim = len(centroids[0])
-    X = np.asarray([r["_q"] for r in prows], dtype=np.int64)
     for _ in range(n_iter - 1):
         cl = np.argmin(exact_sq_dists(X, np.asarray(centroids,
                                                     dtype=np.int64)),
@@ -278,21 +271,17 @@ def kmeans_lloyd_fit(df: DataFrame, id_col: str, *, array_col: str,
     from pyspark.sql.functions import pandas_udf
 
     qdf = df.withColumn("_q", quantize_array(F.col(array_col), quantize))
-    # Bounded-probe fast path (r10): ONE limit-collect replaces the
-    # count + init-take + per-round suff-stats jobs when the fit frame
-    # is small — the iterations run through the local twin
-    # (_lloyd_local_rounds, bit-identical by the exactness contract
-    # below) and the final distributed assignment is unchanged.  Past
-    # the cap the probe rows are discarded and the job-per-round loop
-    # runs as before (a 100 TB fit frame takes that path).
-    prows = (qdf.select(id_col, "_q")
-             .limit(LLOYD_LOCAL_ROWS + 1).collect())
-    local = (len(prows) <= LLOYD_LOCAL_ROWS
-             and len(prows) >= 1
-             and len(prows) * len(prows[0]["_q"]) <= LLOYD_LOCAL_CELLS)
+    # Bounded local twin: ONE fetch replaces the count + init-take +
+    # per-round suff-stats jobs when the fit frame is small — the
+    # iterations run through _lloyd_local_rounds (bit-identical by the
+    # exactness contract below) and the final distributed assignment is
+    # unchanged.  Past the fetch cap the job-per-round loop runs (a
+    # 100 TB fit frame takes that path).
+    tbl = fetch_local(qdf.select(id_col, "_q"))
+    local = tbl is not None and tbl.num_rows > 0
     if local:
-        qdf, _ = rightsize_persist(qdf, n_rows=len(prows))
-        centroids = _lloyd_local_rounds(prows, id_col, k, n_iter)
+        qdf, _ = rightsize_persist(qdf, n_rows=tbl.num_rows)
+        centroids = _lloyd_local_rounds(tbl, id_col, k, n_iter)
         dim = len(centroids[0])
     else:
         # The fit scans qdf n_iter+1 times (assign per round + the
@@ -451,17 +440,17 @@ def silhouette(clustered: DataFrame, features: Sequence[str] = (), *,
         metricName="silhouette").evaluate(assembled))
 
 
-def _silhouette_local(prows, q_col: str, cluster_col: str) -> float:
+def _silhouette_local(tbl, q_col: str, cluster_col: str) -> float:
     """silhouette_exact's bounded-frame local twin: the identical
     exact-integer algebra (n_C·|x|² − 2·x·S_C + SS_C numerators, same
     int64-vs-object-int guard, same per-point 1e-9 quantization and
-    integer mean) on a probe-fetched row list — one batch instead of a
+    integer mean) on a fetched Arrow table — one batch instead of a
     suff-stats scan plus a scoring scan, bit-identical because no float
     ever depends on batch or partition boundaries."""
     import numpy as np
 
-    X = np.asarray([r[q_col] for r in prows], dtype=np.int64)
-    cl_raw = [int(r[cluster_col]) for r in prows]
+    X = arrow_matrix(tbl.column(q_col), np.int64)
+    cl_raw = [int(c) for c in tbl.column(cluster_col).to_pylist()]
     cls = sorted(set(cl_raw))
     if len(cls) < 2:
         return 0.0
@@ -536,18 +525,15 @@ def silhouette_exact(assigned: DataFrame, *, q_col: str = "_q",
     """
     import numpy as np
 
-    # Bounded local twin (r10, same caps as the Lloyd probe): ONE
-    # limit-collect replaces the dim-first + suff-stats + scoring jobs.
-    # Every quantity here is an exact integer (cluster sums, per-point
-    # numerators, the 1e-9-quantized silhouettes), so the local
-    # computation is bit-identical to the batched mapInPandas path
-    # under any partitioning; past the cap the distributed path runs
-    # unchanged.
-    prows = (assigned.select(q_col, cluster_col)
-             .limit(LLOYD_LOCAL_ROWS + 1).collect())
-    if (prows and len(prows) <= LLOYD_LOCAL_ROWS
-            and len(prows) * len(prows[0][q_col]) <= LLOYD_LOCAL_CELLS):
-        return _silhouette_local(prows, q_col, cluster_col)
+    # Bounded local twin: ONE fetch replaces the dim-first + suff-stats
+    # + scoring jobs.  Every quantity here is an exact integer (cluster
+    # sums, per-point numerators, the 1e-9-quantized silhouettes), so
+    # the local computation is bit-identical to the batched mapInPandas
+    # path under any partitioning; past the fetch cap the distributed
+    # path runs unchanged.
+    tbl = fetch_local(assigned.select(q_col, cluster_col))
+    if tbl is not None and tbl.num_rows:
+        return _silhouette_local(tbl, q_col, cluster_col)
 
     dim = len(assigned.select(q_col).first()[0])
     stats = _cluster_suff_stats(assigned, q_col=q_col,

@@ -19,6 +19,8 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import fetch_local
+
 
 def with_fold(df: DataFrame, key: str, k: int, salt: str = "") -> DataFrame:
     """Deterministic fold 0..k-1 from md5 of the row key."""
@@ -114,22 +116,16 @@ def cv_ols(df: DataFrame, key: str, k: int, features: Sequence[str],
     return out
 
 
-#: bounded-frame fast-path cap for cv_logreg (cells = rows × (p+1));
-#: module-level so tests can force the distributed loop on small data
-CV_LOGREG_LOCAL_CELLS = 4_000_000
-
-
-def _cv_logreg_local(folded: DataFrame, k: int, d: int, max_iter: int,
+def _cv_logreg_local(tbl, k: int, d: int, max_iter: int,
                      tol: float) -> list[dict]:
     """cv_logreg's bounded-frame local twin: the identical per-fold-group
     complement-moment Newton loop on the one-shot fetched frame (see the
     fast-path comment at the call site for the equivalence argument)."""
     import numpy as np
 
-    pdf = folded.toPandas()
-    fold_of = pdf["fold"].to_numpy()
-    Z = pdf[[f"_z{i}" for i in range(d)]].to_numpy(dtype=np.float64)
-    Y = pdf["_y"].to_numpy(dtype=np.float64)
+    fold_of = tbl.column("fold").to_numpy()
+    Z = np.column_stack([tbl.column(f"_z{i}").to_numpy() for i in range(d)])
+    Y = tbl.column("_y").to_numpy()
     comp = [fold_of != f for f in range(k)]
 
     betas = [np.zeros(d) for _ in range(k)]
@@ -199,12 +195,11 @@ def cv_logreg(df: DataFrame, key: str, k: int, features: Sequence[str],
     folded = (with_fold(df.na.drop(subset=[*features, label]), key, k, salt)
               .select(F.col(label).cast("double").alias("_y"), "fold",
                       *[z.alias(f"_z{i}") for i, z in enumerate(zc)]))
-    n_rows = folded.count()
-    if n_rows * d <= CV_LOGREG_LOCAL_CELLS:
-        # Bounded-frame fast path (r10, same cap as fit_logistic_irls /
-        # som_fit): fetch the folded frame ONCE and run the identical
-        # complement-moment Newton loop locally — max_iter scans
-        # collapse into one toPandas.  The loop structure (per-fold-
+    tbl = fetch_local(folded, width=d)
+    if tbl is not None:
+        # Bounded local twin: fetch the folded frame ONCE and run the
+        # identical complement-moment Newton loop locally — max_iter
+        # scans collapse into one fetch.  The loop structure (per-fold-
         # group partials, complement = Σ_{g≠f}, same μ/w/step formulas,
         # same convergence rule) is replicated verbatim; float sums
         # associate differently than Spark's partial aggregation, so β
@@ -213,7 +208,7 @@ def cv_logreg(df: DataFrame, key: str, k: int, features: Sequence[str],
         # the oracle pins the EXACT outputs: integer counts and the
         # integer-ratio majority share, which a fetch reproduces bit
         # for bit).  A 100 TB fit frame takes the distributed loop.
-        return _cv_logreg_local(folded, k, d, max_iter, tol)
+        return _cv_logreg_local(tbl, k, d, max_iter, tol)
     folded = folded.cache()
     try:
         z = [F.col(f"_z{i}") for i in range(d)]

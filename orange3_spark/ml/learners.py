@@ -21,6 +21,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import fetch_local
+
 
 def assemble_features(df: DataFrame, features: Sequence[str],
                       out: str = "features",
@@ -250,24 +252,19 @@ def logistic_irls(df: DataFrame, features: Sequence[str],
            .select(*[F.col(c).cast("double").alias(fc)
                      for c, fc in zip(features, fcols)],
                    F.col(label_col).cast("double").alias("_y")))
-    # Bounded-frame fast path (r10; r11: limit-probed single fetch).
-    # The r10 shape was count-gate (one full scan) + persist + toPandas
-    # (a second scan/fetch); fetching up to cap_rows+1 rows directly
-    # folds gate and fetch into ONE job — the limit pushes into the
-    # scan, so an over-cap corpus stops the probe after ~cap rows
-    # (≤ ~32 MB) and takes the distributed loop below.  limit's row
-    # order is arbitrary, and fit_logistic_irls_matrix — the ORACLE'S
-    # OWN local twin — sums per-row quantized stats with exact integer
-    # addition, so β is bit-identical to the distributed loop in any
-    # row order (pinned by test_logistic_irls_partition_independent).
-    cap_rows = 4_000_000 // d
-    pdf_all = sel.limit(cap_rows + 1).toPandas()
-    if len(pdf_all) <= cap_rows:
+    # Bounded local twin: ONE fetch folds the size gate and the fetch
+    # together — an over-cap corpus stops it after ~cap rows and takes
+    # the distributed loop below.  The fetch's row order is arbitrary,
+    # and fit_logistic_irls_matrix — the ORACLE'S OWN local twin — sums
+    # per-row quantized stats with exact integer addition, so β is
+    # bit-identical to the distributed loop in any row order (pinned by
+    # test_logistic_irls_partition_independent).
+    tbl = fetch_local(sel, width=d)
+    if tbl is not None:
         return fit_logistic_irls_matrix(
-            pdf_all[fcols].to_numpy(dtype=np.float64),
-            pdf_all["_y"].to_numpy(dtype=np.float64),
+            tbl.select(fcols).to_pandas().to_numpy(dtype=np.float64),
+            tbl.column("_y").to_numpy(),
             iters=iters, qscale=qscale, ridge=ridge)
-    del pdf_all
     sel = sel.persist()
     # Right-size the iteration frame (same coalesce rule as som_fit /
     # right_size_for_fit): a bounded fit frame arriving through a

@@ -30,11 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-PERM_QSCALE = 1_000_000_000.0
+from orange3_spark.session import fetch_local
 
-#: bounded-frame fast-path cap (cells = rows × (p+2)); module-level so
-#: tests can force the distributed window+join plan on small data
-PERM_LOCAL_CELLS = 4_000_000
+PERM_QSCALE = 1_000_000_000.0
 
 
 def hash_permute_column(df: DataFrame, id_col: str, col: str, *,
@@ -128,10 +126,10 @@ def permutation_importance_ols(df: DataFrame, id_col: str,
     are ONE join + ONE grouped moment aggregation — per-label work
     never becomes per-label jobs.
 
-    Bounded-frame fast path (r10, same cell cap as the IRLS/SOM/cv
-    fast paths): when ``n·(p+2) ≤ 4M`` the frame is fetched ONCE —
-    with the bucket and the per-label md5 sort keys computed SPARK-side
-    (engine-portable hashes, zero Python hashing) — and the pairing +
+    Bounded local twin: when the frame is :func:`fetch_local`-sized
+    (width p+2) it is fetched ONCE — with the bucket and the per-label
+    md5 sort keys computed SPARK-side (engine-portable hashes, zero
+    Python hashing) — and the pairing +
     moments run in numpy.  Every moment is an exact int64 sum of
     quantized values (both engines wrap mod 2⁶⁴), and the per-bucket
     (hash, id) sort orders are total, so the moment set — and therefore
@@ -144,75 +142,73 @@ def permutation_importance_ols(df: DataFrame, id_col: str,
                                   1, 8), 16, 10).cast("long"),
                F.lit(n_buckets))
     labels_all = ["true"] + [f"perm{i}" for i in range(1, n_perm + 1)]
-    # persist for the ROUTE + CONSUME pair: the gating count would
-    # otherwise re-execute the caller's upstream lineage (the registered
-    # query aggregates to unique ids first), and the window+join plan
-    # consumes `pre` twice (x side and stacked y side).  Scoped to this
-    # call — unpersisted before returning on every path.
+    pre = df.na.drop(subset=[*features, target])
+    tbl = fetch_local(pre.select(
+        F.col(id_col).alias("_id"), b.alias("_b"),
+        *[F.col(c).cast("double").alias(f"_x{i}")
+          for i, c in enumerate(features)],
+        F.col(target).cast("double").alias("_y"),
+        *[F.md5(F.concat(F.lit(lb), F.col(id_col).cast("string")))
+          .alias(f"_h_{lb}") for lb in labels_all[1:]]), width=p + 2)
+    if tbl is not None:
+        return _perm_importance_local(tbl, labels_all, scale, p)
+    # the window+join plan consumes `pre` twice (x side and stacked y
+    # side): persist so the caller's upstream lineage runs once
     from pyspark import StorageLevel
-    pre = (df.na.drop(subset=[*features, target])
-           .persist(StorageLevel.MEMORY_AND_DISK))
+    pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        return _perm_importance_routed(
-            pre, id_col, features, target, n_perm, n_buckets, scale,
-            labels_all, b, p)
+        return _perm_importance_distributed(
+            pre, id_col, features, target, labels_all, scale, b, p)
     finally:
         pre.unpersist()
 
 
-def _perm_importance_routed(pre, id_col, features, target, n_perm,
-                            n_buckets, scale, labels_all, b, p):
+def _perm_importance_local(tbl, labels_all, scale, p):
     import math
 
-    n_rows = pre.count()
-    if n_rows * (p + 2) <= PERM_LOCAL_CELLS:
-        import numpy as np
+    import numpy as np
 
-        sel = pre.select(
-            F.col(id_col).alias("_id"), b.alias("_b"),
-            *[F.col(c).cast("double").alias(f"_x{i}")
-              for i, c in enumerate(features)],
-            F.col(target).cast("double").alias("_y"),
-            *[F.md5(F.concat(F.lit(lb), F.col(id_col).cast("string")))
-              .alias(f"_h_{lb}") for lb in labels_all[1:]])
-        pdf = sel.toPandas()
-        bv = pdf["_b"].to_numpy()
-        idv = pdf["_id"].to_numpy()
-        qz = [np.ones(len(pdf), dtype=np.int64)] + [
-            np.floor(pdf[f"_x{i}"].to_numpy(dtype=np.float64)
-                     * scale + 0.5).astype(np.int64)
-            for i in range(p)]
-        qy = np.floor(pdf["_y"].to_numpy(dtype=np.float64)
-                      * scale + 0.5).astype(np.int64)
-        # x side ordered by (bucket, id); y side by (bucket, hash, id):
-        # positions align per bucket because both sorts share the
-        # bucket counts — the same (bucket, rank) pairing as the join
-        xi = np.lexsort((idv, bv))
-        base_m = {"n": int(len(pdf)), "yy": int((qy * qy).sum()),
-                  "sy": int(qy.sum())}
-        for i in range(p + 1):
-            for j in range(i, p + 1):
-                base_m[f"m_{i}_{j}"] = int((qz[i] * qz[j]).sum())
-        out = []
-        for lb in labels_all:
-            m = dict(base_m)
-            if lb == "true":
-                for i in range(p + 1):
-                    m[f"v_{i}"] = int((qz[i] * qy).sum())
-            else:
-                h = pdf[f"_h_{lb}"].to_numpy(dtype="S32")
-                yi = np.lexsort((idv, h, bv))
-                yp = qy[yi]
-                for i in range(p + 1):
-                    m[f"v_{i}"] = int((qz[i][xi] * yp).sum())
-            _check_moment_overflow(m, p)
-            r2 = r2_from_moments(m, p)
-            out.append((lb, int(math.floor(r2 * PERM_QSCALE + 0.5))))
-        return out
+    bv = tbl.column("_b").to_numpy()
+    idv = tbl.column("_id").to_numpy()
+    qz = [np.ones(tbl.num_rows, dtype=np.int64)] + [
+        np.floor(tbl.column(f"_x{i}").to_numpy() * scale + 0.5)
+        .astype(np.int64) for i in range(p)]
+    qy = np.floor(tbl.column("_y").to_numpy() * scale
+                  + 0.5).astype(np.int64)
+    # x side ordered by (bucket, id); y side by (bucket, hash, id):
+    # positions align per bucket because both sorts share the
+    # bucket counts — the same (bucket, rank) pairing as the join
+    xi = np.lexsort((idv, bv))
+    base_m = {"n": tbl.num_rows, "yy": int((qy * qy).sum()),
+              "sy": int(qy.sum())}
+    for i in range(p + 1):
+        for j in range(i, p + 1):
+            base_m[f"m_{i}_{j}"] = int((qz[i] * qz[j]).sum())
+    out = []
+    for lb in labels_all:
+        m = dict(base_m)
+        if lb == "true":
+            for i in range(p + 1):
+                m[f"v_{i}"] = int((qz[i] * qy).sum())
+        else:
+            h = np.asarray(tbl.column(f"_h_{lb}").to_numpy(), dtype="S32")
+            yi = np.lexsort((idv, h, bv))
+            yp = qy[yi]
+            for i in range(p + 1):
+                m[f"v_{i}"] = int((qz[i][xi] * yp).sum())
+        _check_moment_overflow(m, p)
+        r2 = r2_from_moments(m, p)
+        out.append((lb, int(math.floor(r2 * PERM_QSCALE + 0.5))))
+    return out
+
+
+def _perm_importance_distributed(pre, id_col, features, target, labels,
+                                 scale, b, p):
+    import math
+
     base = pre.withColumn("_b", b)
     w_id = Window.partitionBy("_b").orderBy(F.col(id_col))
     base = base.withColumn("_rn", F.row_number().over(w_id))
-    labels = ["true"] + [f"perm{i}" for i in range(1, n_perm + 1)]
     ranked = base
     for lb in labels[1:]:
         h = F.md5(F.concat(F.lit(lb), F.col(id_col).cast("string")))

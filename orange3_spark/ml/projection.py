@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from orange3_spark.session import local_frame
+from orange3_spark.session import arrow_matrix, fetch_local, local_frame
 
 MAX_MDS_POINTS = 20_000
 
@@ -622,31 +622,27 @@ def som_fit(df: DataFrame, cols: Sequence[str] = (), *,
     # ONE array column end-to-end: no P-wide column extraction (a per-dim
     # getItem fan-out re-casts the array P times and blows up codegen at
     # high dim), and every pass below ships a single Arrow list column.
-    # Materialize via cache, NOT localCheckpoint: eager localCheckpoint of
-    # this plan wedges on Spark 4.1 (count/collect/cache ran in <1 s, the
-    # checkpoint hung for minutes).
     pre = (df.select(vec.alias("_arr"))
              .filter(F.col("_arr").isNotNull()
                      & (F.size("_arr") == P)
-                     & ~F.exists("_arr", lambda x: x.isNull() | F.isnan(x)))
-             .cache())
-    n = pre.count()
-    if n == 0:
-        pre.unpersist()
-        raise ValueError("som_fit: no complete rows")
-    if n * P <= 4_000_000:
-        # Bounded-frame fast path (r10): fetch the validated rows once
-        # and run fit_som_matrix — the ORACLE'S OWN local twin, which
-        # reproduces the grid bit for bit from a fetch in ANY row order
-        # (all cross-partition statistics are exact quantized integers).
-        # n_iterations scans collapse into one collect: 19 jobs → 4 at
-        # sf0.1.  A 100 TB fit keeps the distributed loop below.
-        import numpy as np
-        rows = pre.collect()
-        pre.unpersist()
-        X = np.array([r["_arr"] for r in rows], dtype=np.float64)
-        return fit_som_matrix(X, dim_x=dim_x, dim_y=dim_y,
+                     & ~F.exists("_arr", lambda x: x.isNull() | F.isnan(x))))
+    # Bounded local twin: fetch the validated rows once and run
+    # fit_som_matrix — the ORACLE'S OWN local twin, which reproduces the
+    # grid bit for bit from a fetch in ANY row order (all cross-partition
+    # statistics are exact quantized integers).  The n_iterations scans
+    # collapse into one fetch; a 100 TB fit keeps the distributed loop.
+    tbl = fetch_local(pre, width=P)
+    if tbl is not None:
+        if not tbl.num_rows:
+            raise ValueError("som_fit: no complete rows")
+        return fit_som_matrix(arrow_matrix(tbl.column("_arr"), np.float64),
+                              dim_x=dim_x, dim_y=dim_y,
                               n_iterations=n_iterations, sigma=sigma)
+    # Materialize via cache, NOT localCheckpoint: eager localCheckpoint of
+    # this plan wedges on Spark 4.1 (count/collect/cache ran in <1 s, the
+    # checkpoint hung for minutes).
+    pre = pre.cache()
+    n = pre.count()
     # each iteration is one scan; right-size partitions so a small fit
     # isn't n_iterations×parallelism scheduler round-trips, while big data
     # keeps full parallelism

@@ -15,11 +15,13 @@ fixed-point** (parts-per-``total``), so
 * the DuckDB oracle replays iterations verbatim with ``//`` integer
   division.
 
-Scale shape: edges are counted+persisted ONCE (the iteration loop must
-never re-run the upstream edge derivation — at 100 TB that is the whole
-input); each iteration is one shuffle of (dst, contrib) pairs.  Dangling
-mass is folded in as a 1-row aggregate cross-joined into the update —
-no per-iteration driver action.
+Scale shape: a driver-sized edge frame runs the exact-int64 local twin
+on one :func:`~orange3_spark.session.fetch_local` fetch.  Past the fetch
+cap edges are persisted ONCE (the iteration loop must never re-run the
+upstream edge derivation — at 100 TB that is the whole input); each
+iteration is one shuffle of (dst, contrib) pairs.  Dangling mass is
+folded in as a 1-row aggregate cross-joined into the update — no
+per-iteration driver action.
 """
 
 from __future__ import annotations
@@ -27,20 +29,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from orange3_spark.session import local_frame
+from orange3_spark.session import fetch_local, local_frame
 
 #: total rank mass, in fixed-point "parts" — ranks sum to ≤ this
 TOTAL = 10**12
 
-#: edge-row cap for the local twin (2 string cells/row — the r10
-#: bounded-probe 4M-cell size class).  Past it the Pregel loop below
-#: runs unchanged; pass ``local_max_edges=0`` to force it (tests).
-PR_LOCAL_EDGES = 2_000_000
-
 
 def _pagerank_local(src_idx, dst_idx, n: int, *, iterations: int,
                     damping_pct: int, total: int):
-    """The iteration loop on a probe-fetched edge list — the Pregel
+    """The iteration loop on a fetched edge list — the Pregel
     loop's LOCAL TWIN, bit-identical by construction: every quantity is
     exact int64 (ranks ≤ ``total`` = 10¹² and ``ret`` ≤ 85·10¹² stay far
     under 2⁶³), every division is integer division of non-negatives
@@ -67,8 +64,7 @@ def _pagerank_local(src_idx, dst_idx, n: int, *, iterations: int,
 def pagerank_frame(edges: DataFrame, *, src: str = "src",
                    dst: str = "dst", iterations: int = 3,
                    damping_pct: int = 85, total: int = TOTAL,
-                   persisted: list | None = None,
-                   local_max_edges: "int | None" = None) -> DataFrame:
+                   persisted: list | None = None) -> DataFrame:
     """Lazy rank frame ``(node, rank)`` after ``iterations`` rounds.
 
     Exact-integer update (mirrored by the SQL oracle term for term)::
@@ -90,48 +86,37 @@ def pagerank_frame(edges: DataFrame, *, src: str = "src",
     here once the final ranks are materialized; only the returned frame
     stays cached, exposed as ``result.pagerank_cache`` — unpersist it
     when done (mirrors the ``bpe_cache`` convention in text/bpe.py).
-    On the bounded local-twin path (≤ ``local_max_edges`` edge rows,
-    default :data:`PR_LOCAL_EDGES`) the result is an Arrow-backed
-    ``LocalRelation`` and ``pagerank_cache`` is ``None`` — nothing stays
-    cached."""
+    On the bounded local-twin path (a :func:`fetch_local`-sized edge
+    frame) the result is an Arrow-backed ``LocalRelation`` and
+    ``pagerank_cache`` is ``None`` — nothing stays cached."""
     from pyspark import StorageLevel
 
-    raw = (edges.select(F.col(src).cast("string").alias("src"),
-                        F.col(dst).cast("string").alias("dst"))
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    cap = PR_LOCAL_EDGES if local_max_edges is None else local_max_edges
-    if cap:
-        # bounded-probe fast path: one parallel count (which also
-        # materializes `raw`'s cache — the edge derivation, the 100 TB
-        # side, still runs exactly once) + one Arrow fetch of the cached
-        # rows replace the nodes count, dangling probe and every
-        # per-iteration join/agg/persist job.  NOT limit(cap+1): a
-        # CollectLimit over the heavy upstream scans partitions in
-        # sequential scale-up rounds (measured 7.5 s vs 2.4 s here).
-        # Past the cap the Pregel loop below runs unchanged.
-        n_edges = raw.count()
-        if n_edges == 0:
-            raw.unpersist()
-            raise ValueError("pagerank on an empty edge set (0 nodes)")
-        if n_edges <= cap:
-            import pandas as pd
+    raw = edges.select(F.col(src).cast("string").alias("src"),
+                       F.col(dst).cast("string").alias("dst"))
+    # bounded local twin: ONE parallel fetch of the edge frame replaces
+    # the nodes count, dangling probe and every per-iteration
+    # join/agg/persist job.  Past the fetch cap the Pregel loop below
+    # runs unchanged.
+    tbl = fetch_local(raw, width=2)
+    if tbl is not None:
+        import pandas as pd
 
-            probe = raw.toPandas()
-            codes, uniq = pd.factorize(
-                pd.concat([probe["src"], probe["dst"]],
-                          ignore_index=True))
-            m = len(probe)
-            rank = _pagerank_local(
-                codes[:m], codes[m:], len(uniq),
-                iterations=iterations, damping_pct=damping_pct,
-                total=total)
-            raw.unpersist()
-            out = local_frame(
-                edges.sparkSession,
-                [(str(nd), int(rk)) for nd, rk in zip(uniq, rank)],
-                "node string, rank long")
-            out.pagerank_cache = None
-            return out
+        if not tbl.num_rows:
+            raise ValueError("pagerank on an empty edge set (0 nodes)")
+        codes, uniq = pd.factorize(pd.concat(
+            [tbl.column("src").to_pandas(), tbl.column("dst").to_pandas()],
+            ignore_index=True))
+        m = tbl.num_rows
+        rank = _pagerank_local(
+            codes[:m], codes[m:], len(uniq),
+            iterations=iterations, damping_pct=damping_pct, total=total)
+        out = local_frame(
+            edges.sparkSession,
+            [(str(nd), int(rk)) for nd, rk in zip(uniq, rank)],
+            "node string, rank long")
+        out.pagerank_cache = None
+        return out
+    raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
     outdeg = raw.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # message table (src, dst, outdeg), pre-partitioned by src and
     # persisted: InMemoryRelation keeps the partitioning, so each

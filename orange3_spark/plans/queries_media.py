@@ -28,19 +28,21 @@ def _docs_as_media(spark, sf_dir):
                        F.encode("text", "utf-8").alias("content"))
 
 
-def _pixel_checksum(dec):
-    """Shared postlude of the pixel-exact codec queries: per media_id,
-    (n_px, sum of 0..255 pixel values, position-weighted checksum) —
-    the contract every codec oracle recomputes from doc_id arithmetic.
-    One definition so the round/cast rule can't silently diverge
-    between a query and its oracle (r10 review)."""
+def _pixel_checksum(dec, keys=("media_id",)):
+    """Shared postlude of the pixel-exact codec queries: per ``keys``
+    row (a media_id, or a media_id and frame_no), (n_px, sum of 0..255
+    pixel values, position-weighted checksum) — the contract every
+    codec oracle recomputes from doc_id arithmetic.  Pixels come back
+    to exact ints: float32(v/255)·255 rounds to v exactly.  One
+    definition so the round/cast rule can't silently diverge between a
+    query and its oracle (r10 review)."""
     ints = F.transform(F.col("pixels"),
                        lambda x: F.round(x * 255).cast("long"))
     weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
     lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
                                     lambda a, v: a + v))
     return dec.select(
-        "media_id",
+        *keys,
         F.size("pixels").cast("long").alias("n_px"),
         lsum(ints).alias("sum_val"),
         lsum(weighted).alias("checksum"))
@@ -142,17 +144,7 @@ def q_media_decode(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     dec = M.decode_image(blobs, height=H, width=W, decoder="native")
-    # back to exact ints: float32(v/255)·255 rounds to v exactly
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return dec.select(
-        "media_id",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(dec)
 
 @query("q_media_decode_png", """
 WITH px AS (SELECT doc_id, (doc_id * 47 + i) % 256 AS v, i
@@ -192,16 +184,7 @@ def q_media_decode_png(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     dec = M.decode_image(blobs, height=H, width=W, decoder="native")
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return dec.select(
-        "media_id",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(dec)
 
 @query("q_media_decode_jpeg", """
 WITH px AS (SELECT doc_id,
@@ -252,16 +235,7 @@ def q_media_decode_jpeg(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     dec = M.decode_image(blobs, height=H, width=W, decoder="native")
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return dec.select(
-        "media_id",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(dec)
 
 
 @query("q_media_frames", """
@@ -471,16 +445,7 @@ def q_media_decode_jpeg_prog(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     dec = M.decode_image(blobs, height=H, width=W, decoder="native")
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return dec.select(
-        "media_id",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(dec)
 
 
 @query("q_media_decode_jpeg420", """
@@ -539,16 +504,7 @@ def q_media_decode_jpeg420(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     dec = M.decode_image(blobs, height=H, width=W, decoder="native")
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return dec.select(
-        "media_id",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(dec)
 
 
 @query("q_media_decode_gif", """
@@ -602,16 +558,7 @@ def q_media_decode_gif(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     dec = M.decode_image(blobs, height=H, width=W, decoder="native")
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return dec.select(
-        "media_id",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(dec)
 
 
 @query("q_media_decode_tiff", """
@@ -670,16 +617,7 @@ def q_media_decode_tiff(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     dec = M.decode_image(blobs, height=H, width=W, decoder="native")
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return dec.select(
-        "media_id",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(dec)
 
 
 @query("q_media_decode_jpeg12", """
@@ -843,16 +781,7 @@ def q_media_decode_webp(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     dec = M.decode_image(blobs, height=H, width=W, decoder="native")
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return dec.select(
-        "media_id",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(dec)
 
 
 @query("q_media_frames_gif", """
@@ -921,16 +850,7 @@ def q_media_frames_gif(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     fr = M.sample_gif_frames(blobs)
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return fr.select(
-        "media_id", "frame_no",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(fr, ("media_id", "frame_no"))
 
 
 @query("q_media_frames_vid", """
@@ -997,16 +917,7 @@ def q_media_frames_vid(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     fr = M.sample_video_frames(blobs)
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return fr.select(
-        "media_id", "frame_no",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(fr, ("media_id", "frame_no"))
 
 
 @query("q_media_vp8_meta", """
@@ -1114,16 +1025,7 @@ def q_media_frames_mp4(spark, sf_dir):
 
     blobs = docs.mapInPandas(mk, "media_id long, content binary")
     fr = M.sample_video_frames(blobs)
-    ints = F.transform(F.col("pixels"),
-                       lambda x: F.round(x * 255).cast("long"))
-    weighted = F.transform(ints, lambda v, i: v * (i.cast("long") + 1))
-    lsum = (lambda arr: F.aggregate(arr, F.lit(0).cast("long"),
-                                    lambda a, v: a + v))
-    return fr.select(
-        "media_id", "frame_no",
-        F.size("pixels").cast("long").alias("n_px"),
-        lsum(ints).alias("sum_val"),
-        lsum(weighted).alias("checksum"))
+    return _pixel_checksum(fr, ("media_id", "frame_no"))
 
 
 @query("q_media_mp4_meta", """

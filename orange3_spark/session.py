@@ -292,6 +292,59 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         pa.Table.from_arrays(arrays, names=schema.names), schema)
 
 
+#: driver budget of every local twin, in fetched cells (rows × values
+#: per row).  Read at call time: setting it (and LOCAL_ROWS) to 0 sends
+#: every twin down its distributed path.
+LOCAL_CELLS = 4_000_000
+#: row ceiling of a fetch whose caller passes no ``width``
+LOCAL_ROWS = 65_536
+
+
+def fetch_local(df: DataFrame, width: "int | None" = None):
+    """``df`` as one ``pyarrow.Table`` when it is small enough for a
+    driver-local twin, else ``None`` — the caller then runs its
+    distributed loop.
+
+    ``width`` is the value count of a fixed-width row: the cap is
+    ``LOCAL_CELLS // width`` rows.  Without it the cap is ``LOCAL_ROWS``
+    rows and ``LOCAL_CELLS`` fetched cells, every array element counted
+    as one cell.
+
+    The fetch is ``limit(cap + 1).toArrow()``: ONE job, which runs the
+    limit in parallel over the partitions (``collect`` would scan them
+    in executeTake's sequential scale-up rounds).  Arrow keeps NULL
+    apart from NaN and int64 exact; a pandas fetch does neither."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cells = LOCAL_CELLS
+    cap = LOCAL_ROWS if width is None else cells // max(width, 1)
+    tbl = df.limit(cap + 1).toArrow()
+    if tbl.num_rows > cap:
+        return None
+    if width is None:
+        n = 0
+        for col in tbl.columns:
+            t = col.type
+            if pa.types.is_list(t) or pa.types.is_large_list(t):
+                n += pc.sum(pc.list_value_length(col)).as_py() or 0
+            else:
+                n += len(col)
+        if n > cells:
+            return None
+    return tbl
+
+
+def arrow_matrix(col, dtype):
+    """A fixed-length array column of a :func:`fetch_local` table as one
+    ``(rows, length)`` numpy matrix, read column-wise (no per-row
+    Python lists)."""
+    import numpy as np
+
+    arr = col.combine_chunks()
+    return np.asarray(arr.flatten(), dtype=dtype).reshape(len(arr), -1)
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load fixtures and register them as temp views for spark.sql use."""
     dfs = load_tables(spark, sf_dir)

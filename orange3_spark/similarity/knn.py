@@ -237,18 +237,30 @@ def auto_n_planes(n_rows: int, *, target_bucket_rows: int = 64,
                                                / target_bucket_rows))))
 
 
-def _seq_norm_udf():
+def _double_series(values) -> pd.Series:
+    """A ``double`` pandas-UDF result that keeps NaN apart from NULL
+    (``None``): Spark masks the NaNs of a numpy-backed result as NULL,
+    but hands an Arrow-backed one over as is."""
+    import pyarrow as pa
+
+    return pd.Series(pd.arrays.ArrowExtensionArray(
+        pa.array(values, type=pa.float64())))
+
+
+def _seq_norm(arr: Column) -> Column:
     """Vectorized pandas UDF twin of :func:`norm` — BIT-IDENTICAL per
     row: the accumulation loops over dimensions in order (acc = acc +
     x·x, one rounding per op, exactly the fold's op sequence) and is
     vectorized ACROSS rows, where IEEE rounding is per-lane.  NULL
-    arrays → NULL, any length folds over its own length, sqrt is
-    correctly rounded in both runtimes.  Replaces the interpreted
-    higher-order ``F.aggregate`` evaluator (CodegenFallback) on the
-    LSH hot path — guide §4.2; an unrolled JVM expression chain was
-    measured first and REJECTED: at signature widths it overflows
-    janino's 64 KB method limit and the whole stage falls back to the
-    interpreter."""
+    arrays and arrays holding a NULL element → NULL, any length folds
+    over its own length, sqrt is correctly rounded in both runtimes.
+    Arrow hands a NULL element to the UDF as NaN, indistinguishable from
+    a real NaN, so a JVM-side ``exists`` flag masks those rows.
+    Replaces the interpreted higher-order ``F.aggregate`` evaluator
+    (CodegenFallback) on the LSH hot path — guide §4.2; an unrolled JVM
+    expression chain was measured first and REJECTED: at signature
+    widths it overflows janino's 64 KB method limit and the whole stage
+    falls back to the interpreter."""
     import numpy as np
 
     @F.pandas_udf("double")
@@ -267,9 +279,9 @@ def _seq_norm_udf():
             for d in range(int(ln)):
                 acc = acc + X[:, d] * X[:, d]
             out[idx] = np.sqrt(acc)
-        return pd.Series(out, dtype=object)
+        return _double_series(out)
 
-    return _n
+    return F.when(~F.exists(arr, lambda x: x.isNull()), _n(arr))
 
 
 def _lsh_buckets_udf(planes_tables, dim: int):
@@ -312,12 +324,16 @@ def _lsh_buckets_udf(planes_tables, dim: int):
     return _b
 
 
-def _seq_dot_udf():
+def _seq_dot(va: Column, vb: Column) -> Column:
     """Vectorized pandas UDF twin of :func:`dot` — BIT-IDENTICAL: the
     ordered acc = acc + a[d]·b[d] fold, vectorized across rows.  NULL
     on either side → NULL; unequal lengths → NULL (``zip_with`` pads
     the short side with NULLs, poisoning the fold); equal lengths fold
-    over that shared length."""
+    over that shared length.  Unlike the fold, a NULL element counts as
+    NaN (Arrow hands it over as one): the cosine score divides by
+    :func:`_seq_norm`, which is NULL for such a vector, so the score is
+    NULL as on the JVM without a per-pair ``exists`` pass (which cost
+    0.5-1 s per q_neardup_cosine_scaled run at sf0.1 on 4 vCPUs)."""
     import numpy as np
 
     @F.pandas_udf("double")
@@ -340,9 +356,9 @@ def _seq_dot_udf():
             for d in range(int(ln)):
                 acc = acc + X[:, d] * Y[:, d]
             out[idx] = acc
-        return pd.Series(out, dtype=object)
+        return _double_series(out)
 
-    return _d
+    return _d(va, vb)
 
 
 def neardup_cosine(df: DataFrame, threshold: float = 0.95, *,
@@ -401,14 +417,14 @@ def neardup_cosine(df: DataFrame, threshold: float = 0.95, *,
     # frames result as r10's _nation_features experiment)
     base = (_spread_scan(df.select(F.col(id_col).alias("_id"),
                                    F.col(vec_col).alias("_v")))
-            .withColumn("_n", _seq_norm_udf()(F.col("_v"))))
+            .withColumn("_n", _seq_norm(F.col("_v"))))
     if n_planes == "auto":
         n_planes = auto_n_planes(base.count())
     buckets = _lsh_buckets_udf(
         [hyperplanes(dim, n_planes, seed + 7919 * t)
          for t in range(n_tables)], dim)
     tagged = base.select(
-        "_id", "_n", F.explode(buckets(F.col("_v"))).alias("bucket"))
+        "_id", F.explode(buckets(F.col("_v"))).alias("bucket"))
     # The bucket self-join and the multi-table dedup move ONLY ids:
     # shuffling the candidate pairs WITH their vectors through the
     # distinct moved two dim-length arrays per pair (measured the
@@ -429,7 +445,7 @@ def neardup_cosine(df: DataFrame, threshold: float = 0.95, *,
                                F.col("_v").alias("vb"),
                                F.col("_n").alias("nb")), "id_b"))
     return (pairs.withColumn("score",
-                             _seq_dot_udf()(F.col("va"), F.col("vb"))
+                             _seq_dot(F.col("va"), F.col("vb"))
                              / (F.col("na") * F.col("nb")))
                  .filter(F.col("score") >= threshold)
                  .select("id_a", "id_b", "score"))

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from orange3_spark.ml.cluster import LLOYD_SCALE, quantize_array
-from orange3_spark.session import local_frame
+from orange3_spark.session import arrow_matrix, fetch_local, local_frame
 
 
 def _assign_codes_udf(cents):
@@ -81,22 +81,19 @@ def pq_fit(df: DataFrame, id_col: str, *, array_col: str,
     else:
         qdf = df.withColumn("_q",
                             quantize_array(F.col(array_col), quantize))
-    # Bounded-probe fast path (r10, the Lloyd-family pattern): one
-    # limit-collect replaces the count + init-take + per-round
-    # suff-stats jobs; the local rounds mirror _assign_codes_udf's
-    # exact-int64 distances/argmin and the identical floor(Σ/n + 0.5)
-    # update, so the codebooks — and the final distributed encoding —
-    # are bit-identical.  Past the cap the job-per-round loop runs.
-    from orange3_spark.ml.cluster import LLOYD_LOCAL_CELLS, LLOYD_LOCAL_ROWS
-
-    prows = (qdf.select(id_col, "_q")
-             .limit(LLOYD_LOCAL_ROWS + 1).collect())
-    local = bool(prows and len(prows) <= LLOYD_LOCAL_ROWS
-                 and len(prows) * len(prows[0]["_q"]) <= LLOYD_LOCAL_CELLS)
+    # Bounded local twin (the Lloyd-family pattern): one fetch replaces
+    # the count + init-take + per-round suff-stats jobs; the local
+    # rounds mirror _assign_codes_udf's exact-int64 distances/argmin and
+    # the identical floor(Σ/n + 0.5) update, so the codebooks — and the
+    # final distributed encoding — are bit-identical.  Past the fetch
+    # cap the job-per-round loop runs.
+    tbl = fetch_local(qdf.select(id_col, "_q"))
+    local = tbl is not None and tbl.num_rows > 0
     if local:
-        qdf, _ = rightsize_persist(qdf, n_rows=len(prows))
-        srt = sorted(prows, key=lambda r: r[id_col])
-        first = [[int(x) for x in r["_q"]] for r in srt[:k]]
+        qdf, _ = rightsize_persist(qdf, n_rows=tbl.num_rows)
+        X = arrow_matrix(tbl.column("_q"), np.int64)
+        ids = tbl.column(id_col).to_pylist()
+        first = X[sorted(range(len(ids)), key=ids.__getitem__)[:k]].tolist()
     else:
         qdf, _ = rightsize_persist(qdf)
         first = [[int(x) for x in r["_q"]]
@@ -111,7 +108,6 @@ def pq_fit(df: DataFrame, id_col: str, *, array_col: str,
              for j in range(m)]
 
     if local and n_iter > 1:
-        X = np.asarray([r["_q"] for r in prows], dtype=np.int64)
         for _ in range(n_iter - 1):
             for j in range(m):
                 Cj = np.asarray(cents[j], dtype=np.int64)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from orange3_spark.session import local_frame
+from orange3_spark.session import fetch_local, local_frame
 
 
 def basic_stats(df: DataFrame, columns: Optional[Sequence[str]] = None) -> DataFrame:
@@ -226,11 +226,6 @@ def fdr(p_values: Sequence[float], dependent: bool = False) -> list[float]:
     return out
 
 
-#: (variable, value) histogram row cap for the single-scan local path —
-#: the r10 rounds' shared bounded-probe size class.  Above it the
-#: two-scan distributed plan runs unchanged.
-FEATURE_STATS_HIST_ROWS = 65_536
-
 _I64 = (1 << 64)
 
 
@@ -270,8 +265,7 @@ def _spark_median_long(qcounts: "list[tuple[int, int]]") -> Optional[float]:
 
 
 def _feature_statistics_hist(df: DataFrame, cols: "list[str]",
-                             quantize: float,
-                             cap: int) -> Optional[DataFrame]:
+                             quantize: float) -> Optional[DataFrame]:
     """Single-scan bounded-histogram twin of the exact-quantized path.
 
     The (variable, value) frequency table is the sufficient statistic
@@ -284,8 +278,9 @@ def _feature_statistics_hist(df: DataFrame, cols: "list[str]",
     maximal count — the same (count DESC, value ASC) order the window
     path uses.  One aggregation scan replaces the wide-moment scan
     (whose per-column ``count_distinct`` Expand multiplies the input)
-    plus the mode scan.  Returns ``None`` when the histogram exceeds
-    ``cap`` rows — caller falls back to the distributed two-scan plan."""
+    plus the mode scan.  Returns ``None`` when the histogram is past the
+    :func:`fetch_local` cap — caller falls back to the distributed
+    two-scan plan."""
     import math
 
     n = len(cols)
@@ -294,12 +289,13 @@ def _feature_statistics_hist(df: DataFrame, cols: "list[str]",
                              "as (variable, value)"))
               .groupBy("variable", "value")
               .agg(F.count(F.lit(1)).alias("cnt")))
-    rows = hist.limit(cap + 1).collect()
-    if len(rows) > cap:
+    tbl = fetch_local(hist)
+    if tbl is None:
         return None
     per: dict = {c: [] for c in cols}
-    for r in rows:
-        per[r["variable"]].append((r["value"], int(r["cnt"])))
+    for var, v, cnt in zip(*(tbl.column(c).to_pylist()
+                             for c in ("variable", "value", "cnt"))):
+        per[var].append((v, cnt))
 
     out_rows = []
     for c in cols:
@@ -343,9 +339,7 @@ def _feature_statistics_hist(df: DataFrame, cols: "list[str]",
 
 def feature_statistics(df: DataFrame, columns: Sequence[str], *,
                        approx: bool = False,
-                       quantize: Optional[float] = None,
-                       hist_rows: int = FEATURE_STATS_HIST_ROWS
-                       ) -> DataFrame:
+                       quantize: Optional[float] = None) -> DataFrame:
     """Per-variable profile (Feature Statistics widget,
     ``Orange/widgets/data/owfeaturestatistics.py``): count, missing,
     distinct, mean, population stddev, min/max, exact median, mode.
@@ -374,10 +368,10 @@ def feature_statistics(df: DataFrame, columns: Sequence[str], *,
 
     The exact-quantized path first tries the bounded-histogram twin
     (:func:`_feature_statistics_hist`): when the (variable, value)
-    frequency table fits ``hist_rows``, ONE aggregation scan yields
-    every output bit-identically (see its docstring for the argument
-    per field) instead of the wide-moment scan + mode scan.  Past the
-    cap — or for ``approx`` / un-quantized float moments, whose
+    frequency table is :func:`fetch_local`-sized, ONE aggregation scan
+    yields every output bit-identically (see its docstring for the
+    argument per field) instead of the wide-moment scan + mode scan.
+    Past the cap — or for ``approx`` / un-quantized float moments, whose
     partial-aggregation float order the local twin cannot replay — the
     two-scan distributed plan below runs unchanged.  The failed probe
     then cost one extra map-side-combined aggregation; corpora where
@@ -386,9 +380,8 @@ def feature_statistics(df: DataFrame, columns: Sequence[str], *,
     from pyspark.sql.window import Window
 
     cols = list(columns)
-    if quantize is not None and not approx and hist_rows:
-        out = _feature_statistics_hist(df, cols, float(quantize),
-                                       hist_rows)
+    if quantize is not None and not approx:
+        out = _feature_statistics_hist(df, cols, float(quantize))
         if out is not None:
             return out
     aggs = []

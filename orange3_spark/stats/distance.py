@@ -25,7 +25,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from orange3_spark.session import local_frame
+from orange3_spark.session import fetch_local, local_frame
 
 
 def _standardize(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -245,9 +245,9 @@ def column_distances(df: DataFrame, cols: Sequence[str], *,
                .select("p.col_a", "p.col_b", "p.dist"))
 
 
-def _spearman_cols_driver(spark, rows, cols, absolute: bool) -> DataFrame:
+def _spearman_cols_driver(spark, tbl, cols, absolute: bool) -> DataFrame:
     """Driver-side exact finish of :func:`spearman_column_distances`
-    for a capped joint (value-tuple, count) frame.
+    for a fetched joint (value-tuple, count) frame.
 
     Mirrors the distributed plan term for term: rows with a NULL key
     are dropped (the inner rank-map joins drop them), NaN groups with
@@ -261,16 +261,11 @@ def _spearman_cols_driver(spark, rows, cols, absolute: bool) -> DataFrame:
 
     k = len(cols)
     groups = []
-    for r in rows:
-        key = []
-        for c in cols:
-            v = r[f"v_{c}"]
-            if v is None:
-                key = None
-                break
-            key.append(None if math.isnan(v) else float(v))
-        if key is not None:
-            groups.append((key, int(r["__n"])))
+    for *vals, n in zip(*(tbl.column(f"v_{c}").to_pylist() for c in cols),
+                        tbl.column("__n").to_pylist()):
+        if None not in vals:
+            groups.append(([None if math.isnan(v) else v for v in vals],
+                           n))
 
     rk_maps = []
     for j in range(k):
@@ -330,8 +325,7 @@ def _spearman_pairs_finish(tot, s, ss, sab, cols, absolute):
 
 
 def spearman_column_distances(df: DataFrame, cols: Sequence[str], *,
-                              absolute: bool = False,
-                              driver_cap: int = 100_000) -> DataFrame:
+                              absolute: bool = False) -> DataFrame:
     """SpearmanR distance between columns: replace each column with TWICE
     its average-tie rank — an exact int64 (reference SpearmanModel,
     distance.py:609-620; 2·rank leaves ρ unchanged) — then Pearson on the
@@ -345,10 +339,10 @@ def spearman_column_distances(df: DataFrame, cols: Sequence[str], *,
     Physical shape (r10, the r9 2.4x regression fix): ONE scan of the
     data into a joint ``(v_c1..v_ck) -> count`` frame; everything after
     is a re-aggregation of THAT frame.  When the joint frame is small
-    (a capped ``take``, the same bounded-probe pattern as
-    ``_cent_rows``) the ranks and exact integer sums are computed on
-    the driver in arbitrary-precision Python ints — one shuffle, one
-    probe job, zero windows/joins (measured 1.4 s -> ~0.5 s at sf0.1);
+    (one :func:`fetch_local` fetch) the ranks and exact integer sums are
+    computed on the driver in arbitrary-precision Python ints — one
+    shuffle, one fetch job, zero windows/joins (measured 1.4 s -> ~0.5 s
+    at sf0.1);
     the final ``num / (sqrt(da)·sqrt(db))`` is the identical
     correctly-rounded int->float64 conversion on every engine, so the
     result is bit-for-bit the distributed plan's.  Past the cap (a
@@ -371,14 +365,11 @@ def spearman_column_distances(df: DataFrame, cols: Sequence[str], *,
     # anyway — rank over exactly the rows that participate
     for c in cols:
         joint = joint.where(F.col(f"v_{c}").isNotNull())
+    tbl = fetch_local(joint)
+    if tbl is not None:
+        return _spearman_cols_driver(df.sparkSession, tbl, list(cols),
+                                     absolute)
     joint = joint.persist(StorageLevel.MEMORY_AND_DISK)
-
-    probe = joint.take(driver_cap + 1) if driver_cap > 0 else []
-    if driver_cap > 0 and len(probe) <= driver_cap:
-        out = _spearman_cols_driver(df.sparkSession, probe, list(cols),
-                                    absolute)
-        joint.unpersist()
-        return out
     ranked = joint
     for c in cols:
         # 2·(avg rank of v) = 2·(#rows < v) + (#ties of v) + 1 — exact

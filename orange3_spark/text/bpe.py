@@ -56,6 +56,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import fetch_local
 from orange3_spark.text.analysis import tokens
 
 #: single / doubled sentinel (U+001F "unit separator" — never in text)
@@ -111,10 +112,10 @@ def bpe_fit(docs: DataFrame, *, text_col: str = "text",
     words = (word_counts(docs, text_col=text_col)
              .select("cnt", _encode(F.col("w")).alias("s")))
     words = words.persist()
-    n_words = words.count()
-    if n_words <= 500_000:
-        # Bounded-vocab fast path (r10): fetch the word table once and
-        # run the merge rounds locally — the double-sentinel encoding
+    tbl = fetch_local(words)
+    if tbl is not None:
+        # Bounded local twin: fetch the word table once and run the
+        # merge rounds locally — the double-sentinel encoding
         # exists precisely so that merge semantics are identical in
         # Python, Spark F.replace and DuckDB (module docstring), and
         # every statistic is an exact integer count with a total
@@ -122,11 +123,11 @@ def bpe_fit(docs: DataFrame, *, text_col: str = "text",
         # SAME merge list as the distributed loop while n_merges
         # explode+groupBy+TakeOrdered jobs collapse into one collect.
         # The returned frame is the identical lazy replace chain over
-        # the cached words.  A 100 TB-scale vocabulary (> cap distinct
-        # words) takes the distributed loop below.
-        rows = words.collect()
-        cnts = [int(r["cnt"]) for r in rows]
-        syms = [[x for x in r["s"].split(DS) if x] for r in rows]
+        # the cached words.  A vocabulary past the fetch cap takes the
+        # distributed loop below.
+        cnts = tbl.column("cnt").to_pylist()
+        syms = [[x for x in s.split(DS) if x]
+                for s in tbl.column("s").to_pylist()]
         merges = []
         for rank in range(n_merges):
             pc: dict = {}

@@ -399,16 +399,15 @@ JOB_BUDGETS = {
     # AQE stages + the final scoring aggregate (measured 13); a breach
     # means a per-iteration rescan leaked in (budget = measured + 25%)
     "q_quality_classifier": 17,
-    # pagerank bounded local twin (r10): ONE parallel count of the
-    # persisted edge frame (materializes the cache — the raw input is
-    # read exactly once) + ONE Arrow fetch of the cached rows + the
+    # pagerank bounded local twin: ONE session.fetch_local job over the
+    # edge frame (width 2, so up to LOCAL_CELLS // 2 edge rows) + the
     # literal top-k frame; iterations are exact-int64 numpy on the
     # driver, bit-identical to the Pregel loop (graph.py:_pagerank_local,
     # parity-pinned in test_operators).  Measured 11 cold / 9 steady at
-    # sf0.01; budget = measured + ~25%.  A breach means the probe
-    # stopped reading the cache or the distributed loop leaked back in
-    # below the cap (past PR_LOCAL_EDGES the Pregel loop still owns the
-    # job count — its historical budget was 50).
+    # sf0.01 before the fetch folded the count job in; budget = that
+    # measurement + ~25%.  A breach means the distributed loop leaked
+    # back in below the cap (past the fetch cap the Pregel loop owns
+    # the job count — its historical budget was 50).
     "q_pagerank": 14,
     # two ivf_knn builds (approx + exhaustive sides), each = Lloyd fit
     # jobs + centroid refresh collect + the final compare aggregate

@@ -74,7 +74,8 @@ def main() -> None:
             group = f"prof-{name}-{i}"
             sc.setJobGroup(group, name)
             t0 = time.perf_counter()
-            fn(spark, args.sf).count()
+            df = fn(spark, args.sf)
+            df.count()
             times.append(round(time.perf_counter() - t0, 4))
             sc.setJobGroup(None, None)
             if i == args.runs - 1:  # steady-state run's job breakdown
@@ -90,9 +91,10 @@ def main() -> None:
                             stages += 1
                             tasks += si.numTasks
             isolate()
-        plan = fn(spark, args.sf)._sc._jvm  # noqa: F841  (keep ref pattern simple)
+        # explain the last timed frame: building it again would re-run
+        # every eager fit job of the query
         try:
-            explained = fn(spark, args.sf)._jdf.queryExecution().explainString(
+            explained = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"))
         except Exception:
@@ -100,7 +102,7 @@ def main() -> None:
             from contextlib import redirect_stdout
             buf = io.StringIO()
             with redirect_stdout(buf):
-                fn(spark, args.sf).explain("formatted")
+                df.explain("formatted")
             explained = buf.getvalue()
         rec = {"query": name, "times": times, "min": min(times),
                "jobs": jobs, "stages": stages, "tasks": tasks}

@@ -22,6 +22,25 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def no_local_twins(monkeypatch):
+    """Context manager that sends every bounded local twin down its
+    distributed path: inside ``with no_local_twins():`` the
+    ``session.fetch_local`` budget is 0 rows and 0 cells."""
+    import contextlib
+
+    from orange3_spark import session
+
+    @contextlib.contextmanager
+    def off():
+        with monkeypatch.context() as m:
+            m.setattr(session, "LOCAL_CELLS", 0)
+            m.setattr(session, "LOCAL_ROWS", 0)
+            yield
+
+    return off
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

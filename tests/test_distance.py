@@ -246,8 +246,9 @@ def test_spearman_cols_exact_integer_sums(spark):
             assert math.copysign(1.0, v) > 0
 
 
-def test_spearman_cols_driver_path_equals_distributed(spark):
-    """The capped driver fast path (r10) must emit BIT-IDENTICAL doubles
+def test_spearman_cols_driver_path_equals_distributed(spark,
+                                                     no_local_twins):
+    """The bounded driver fast path must emit BIT-IDENTICAL doubles
     to the distributed rank-map plan — including ties, NaN grouping
     (NaN ranks greater than every double, as in Spark's normalized join
     keys and sort order), NULL-row dropping, and the exact ±1 branch."""
@@ -265,9 +266,15 @@ def test_spearman_cols_driver_path_equals_distributed(spark):
     cols = ["x", "y", "z"]
     fast = {(r.col_a, r.col_b): r.dist
             for r in D.spearman_column_distances(df, cols).collect()}
-    dist = {(r.col_a, r.col_b): r.dist
-            for r in D.spearman_column_distances(
-                df, cols, driver_cap=0).collect()}
+    fa = {(r.col_a, r.col_b): r.dist
+          for r in D.spearman_column_distances(
+              df, cols, absolute=True).collect()}
+    with no_local_twins():
+        dist = {(r.col_a, r.col_b): r.dist
+                for r in D.spearman_column_distances(df, cols).collect()}
+        da = {(r.col_a, r.col_b): r.dist
+              for r in D.spearman_column_distances(
+                  df, cols, absolute=True).collect()}
     assert set(fast) == set(dist)
     for k in fast:
         if fast[k] is None or dist[k] is None:
@@ -277,10 +284,4 @@ def test_spearman_cols_driver_path_equals_distributed(spark):
             assert math.copysign(1.0, fast[k]) == math.copysign(1.0, dist[k])
 
     # absolute variant too
-    fa = {(r.col_a, r.col_b): r.dist
-          for r in D.spearman_column_distances(
-              df, cols, absolute=True).collect()}
-    da = {(r.col_a, r.col_b): r.dist
-          for r in D.spearman_column_distances(
-              df, cols, absolute=True, driver_cap=0).collect()}
     assert fa == da

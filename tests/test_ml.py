@@ -1047,7 +1047,7 @@ def test_cn2_sd_weighted_covering(spark):
         by_cls.setdefault(cls, set()).add(frozenset(s))
 
 
-def test_cv_logreg_local_twin_matches_distributed(spark, monkeypatch):
+def test_cv_logreg_local_twin_matches_distributed(spark, no_local_twins):
     """The r10 bounded-frame fast path must reproduce the distributed
     complement-moment Newton loop: per-fold exact counts and majority
     share bit-identical, β within float-association drift (1e-6)."""
@@ -1066,8 +1066,8 @@ def test_cv_logreg_local_twin_matches_distributed(spark, monkeypatch):
     df = spark.createDataFrame(
         rows, "id long, x1 double, x2 double, label double")
     local = E.cv_logreg(df, "id", 3, ["x1", "x2"], "label", max_iter=20)
-    monkeypatch.setattr(E, "CV_LOGREG_LOCAL_CELLS", 0)
-    dist = E.cv_logreg(df, "id", 3, ["x1", "x2"], "label", max_iter=20)
+    with no_local_twins():
+        dist = E.cv_logreg(df, "id", 3, ["x1", "x2"], "label", max_iter=20)
     assert [r["fold"] for r in local] == [r["fold"] for r in dist]
     for a, b in zip(local, dist):
         assert a["n_test"] == b["n_test"]
@@ -1079,7 +1079,7 @@ def test_cv_logreg_local_twin_matches_distributed(spark, monkeypatch):
 
 
 def test_permutation_importance_local_twin_matches_distributed(
-        spark, monkeypatch):
+        spark, no_local_twins):
     """The r10 bounded fast path (Spark-side md5 sort keys + numpy
     pairing/moments) must return BIT-identical fixed-point R²s to the
     distributed window+join plan: every moment is an exact int64 sum."""
@@ -1092,7 +1092,7 @@ def test_permutation_importance_local_twin_matches_distributed(
         rows, "id long, f1 double, f2 double, y double")
     fast = P.permutation_importance_ols(df, "id", ["f1", "f2"], "y",
                                         n_perm=3)
-    monkeypatch.setattr(P, "PERM_LOCAL_CELLS", 0)
-    dist = P.permutation_importance_ols(df, "id", ["f1", "f2"], "y",
-                                        n_perm=3)
+    with no_local_twins():
+        dist = P.permutation_importance_ols(df, "id", ["f1", "f2"], "y",
+                                            n_perm=3)
     assert fast == dist

@@ -358,7 +358,8 @@ def test_cohort_retention_ages(spark):
     assert got == {(1, 0): 2, (1, 1): 1, (8, 0): 1, (8, 2): 1}
 
 
-def test_pagerank_fixed_point_deterministic_and_dangling(spark):
+def test_pagerank_fixed_point_deterministic_and_dangling(spark,
+                                                         no_local_twins):
     from orange3_spark.operators.graph import pagerank_frame, pagerank_topk
 
     # star: hub -> a,b,c (a,b,c dangling); hub should outrank leaves'
@@ -366,8 +367,10 @@ def test_pagerank_fixed_point_deterministic_and_dangling(spark):
     edges = spark.createDataFrame(
         [("hub", "a"), ("hub", "b"), ("hub", "c"),
          ("a", "hub"), ("b", "hub")], "src string, dst string")
-    # local_max_edges=0 forces the distributed Pregel loop
-    ranks1 = pagerank_frame(edges, iterations=3, local_max_edges=0)
+    # no_local_twins forces the distributed Pregel loop
+    with no_local_twins():
+        ranks1 = pagerank_frame(edges, iterations=3)
+        ranks2 = pagerank_frame(edges.repartition(7), iterations=3)
     r = {x["node"]: x["rank"] for x in ranks1.collect()}
     assert set(r) == {"hub", "a", "b", "c"}
     assert r["hub"] > r["a"] == r["b"] > 0
@@ -375,8 +378,6 @@ def test_pagerank_fixed_point_deterministic_and_dangling(spark):
     # c's dangling retained mass is redistributed to everyone equally)
     assert r["c"] == r["a"]
     # exact integer determinism under repartition
-    ranks2 = pagerank_frame(edges.repartition(7), iterations=3,
-                            local_max_edges=0)
     r2 = {x["node"]: x["rank"] for x in ranks2.collect()}
     assert r == r2
     # direct calls self-clean intermediates; the result cache is the

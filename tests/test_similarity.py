@@ -435,3 +435,44 @@ def test_lsh_buckets_udf_matches_jvm_signature_with_nan(spark):
         assert udf_sig == jvm_sig, (i, udf_sig, jvm_sig)
     all_bits = (1 << n_planes) - 1
     assert got[2][0] == [f"{t}:{all_bits}" for t in range(2)]
+
+
+def test_seq_norm_dot_udfs_match_jvm_folds_on_null_and_nan(spark):
+    """The vectorized norm/dot twins and the cosine score built from them
+    equal the JVM ``norm``/``dot`` folds row for row: a NULL element
+    makes the norm and the score NULL (Arrow would hand it to the UDF as
+    NaN), a real NaN element makes them NaN."""
+    import math
+
+    from orange3_spark.similarity.knn import _seq_dot, _seq_norm, dot, norm
+
+    nan = float("nan")
+    rows = [(0, [1.0, -2.0, 0.5], [3.0, 1.0, -4.0]),
+            (1, [1.0, None, 2.0], [1.0, 1.0, 1.0]),   # NULL element
+            (2, [1.0, nan, 2.0], [1.0, 1.0, 1.0]),    # NaN element
+            (3, [2.0, 2.0, 2.0], [1.0, None, 1.0]),   # NULL on b only
+            (4, None, [1.0, 2.0, 3.0]),
+            (5, [1.0, 2.0], [1.0, 2.0, 3.0])]         # unequal lengths
+    df = spark.createDataFrame(
+        rows, "id long, a array<double>, b array<double>")
+    a, b = F.col("a"), F.col("b")
+    got = df.select(
+        "id", _seq_norm(a).alias("un"), norm(a).alias("jn"),
+        _seq_dot(a, b).alias("ud"), dot(a, b).alias("jd"),
+        (_seq_dot(a, b) / (_seq_norm(a) * _seq_norm(b))).alias("us"),
+        (dot(a, b) / (norm(a) * norm(b))).alias("js")).collect()
+
+    def same(x, y):
+        if x is None or y is None:
+            return x is None and y is None
+        return (math.isnan(x) and math.isnan(y)) or x == y
+
+    for r in got:
+        assert same(r["un"], r["jn"]), (r["id"], r["un"], r["jn"])
+        assert same(r["us"], r["js"]), (r["id"], r["us"], r["js"])
+        if r["id"] not in (1, 3):       # no NULL element: dot twin too
+            assert same(r["ud"], r["jd"]), (r["id"], r["ud"], r["jd"])
+    by_id = {r["id"]: r for r in got}
+    assert by_id[1]["un"] is None and by_id[1]["us"] is None
+    assert by_id[3]["us"] is None
+    assert math.isnan(by_id[2]["un"]) and math.isnan(by_id[2]["us"])

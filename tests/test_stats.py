@@ -322,10 +322,11 @@ def test_check_max_levels_exact_at_boundary(spark):
         check_max_levels(wide, ["a"], 100, "test")
 
 
-def test_feature_statistics_hist_twin_matches_distributed(spark):
+def test_feature_statistics_hist_twin_matches_distributed(spark,
+                                                          no_local_twins):
     """The bounded-histogram single-scan path is the distributed
     exact-quantized plan's local twin: every field bit-identical
-    (hist_rows=0 forces the two-scan plan) — nulls, NaN, mode ties,
+    (no_local_twins forces the two-scan plan) — nulls, NaN, mode ties,
     even/odd counts, negatives, interpolated medians."""
     from orange3_spark.stats.basic import feature_statistics
 
@@ -336,8 +337,8 @@ def test_feature_statistics_hist_twin_matches_distributed(spark):
         "a double, b double, c double")
     cols = ["a", "b", "c"]
     fast = feature_statistics(df, cols, quantize=100.0).collect()
-    slow = feature_statistics(df, cols, quantize=100.0,
-                              hist_rows=0).collect()
+    with no_local_twins():
+        slow = feature_statistics(df, cols, quantize=100.0).collect()
     by_var = lambda rows: {r.variable: r for r in rows}
     f, s = by_var(fast), by_var(slow)
     assert set(f) == set(s)
