@@ -41,38 +41,23 @@ def entry(spark: SparkSession) -> DataFrame:
 # every registered query within ~5 rounds and staleness stays bounded
 # without hand-curated lists.
 _CHANGED_THIS_ROUND = [
-    # Every registered query whose bounded local twin now fetches through
-    # session.fetch_local (one limit(cap+1).toArrow() job, Arrow tables
-    # instead of Rows/pandas, one shared cap) regrades first.
-    # Lloyd k-means twin (ml/cluster.py kmeans_lloyd_fit)
-    "q_ml_kmeans", "q_ml_ari", "q_cluster_curation", "q_dedup_semantic",
-    "q_ann_recall", "q_ann_incremental", "q_knn_ivf",
-    "q_hard_negatives_blocked",
-    # Lloyd + exact silhouette twins (ml/cluster.py silhouette_exact)
-    "q_ml_silhouette",
-    # PQ codebook twin (similarity/pq.py), with the IVF Lloyd fit
-    "q_pq_codes", "q_pq_adc", "q_ivfpq",
-    # IRLS logistic-regression twin (ml/learners.py logistic_irls)
-    "q_ml_logreg_irls", "q_quality_classifier",
-    # SOM twin (ml/projection.py som_fit): no count job before the fetch
-    "q_ml_som",
-    # pagerank twin (operators/graph.py): no count/persist before the fetch
-    "q_pagerank",
-    # cv_logreg twin (ml/evaluation.py): no count job before the fetch
-    "q_ml_logreg_cv",
-    # permutation-importance twin (ml/permutation.py): no persist/count
-    "q_permutation_importance",
-    # feature-statistics histogram twin (stats/basic.py)
-    "q_feature_statistics",
-    # CN2 contingency-cube twin (ml/rules.py)
-    "q_ml_cn2", "q_ml_cn2_depth2",
-    # column-Spearman driver finish (stats/distance.py)
-    "q_distance_spearman_cols",
-    # BPE merge-round twin (text/bpe.py): no count job before the fetch
-    "q_bpe_vocab", "q_bpe_tokenize",
-    # not a twin: the LSH norm/dot UDFs now return NULL for a NULL
-    # element and NaN for a NaN one, like the JVM folds (similarity/knn.py)
-    "q_neardup_cosine", "q_neardup_cosine_scaled",
+    # Every registered query whose capped driver fetch now goes through
+    # session.fetch_capped (one limit(cap+1).toArrow() job, no count or
+    # persist probe before it, Arrow columns instead of Rows).
+    # graph twins now on session.fetch_local (text/dedup.py, ml/cluster.py)
+    "q_dup_clusters", "q_ml_communities", "q_leakage_safe_split",
+    "q_training_pipeline", "q_ml_dbscan",
+    # the distributed half, called directly: eager checkpoint, not a cache
+    "q_dup_clusters_distributed",
+    # pair-matrix guards and the shared numpy pair_matrix builder
+    "q_ml_hierarchical", "q_heatmap_order", "q_heatmap_order_olo",
+    "q_ml_mds",
+    # fitted-row guards (ml/projection.py)
+    "q_ml_freeviz", "q_ml_tsne", "q_ml_isomap",
+    # source mixing: one source-count fetch (text/pipeline.py)
+    "q_mix_sources", "q_mix_temperature",
+    # .dst writer, CN2 contingency cube
+    "q_dst_roundtrip", "q_ml_cn2_unordered", "q_ml_cn2_sd",
 ]
 
 

@@ -682,9 +682,11 @@ def dbscan(df: DataFrame, id_col: str, features: Sequence[str], *,
 
     Cost: one shuffle on grid cells + the small fixpoint on core edges —
     the textbook MR-DBSCAN shape.  ``grid_blocking=False`` falls back to
-    the all-pairs join (tiny data / correctness checks).
+    the all-pairs join (tiny data / correctness checks).  A
+    :func:`fetch_local`-sized ε-pair list (width 2) runs steps 2-4 on
+    the driver instead.
     """
-    from orange3_spark.text.dedup import dup_clusters
+    from orange3_spark.text.dedup import dup_clusters, min_label_components
 
     k = len(features)
     # cache: `pts` drives the pair join, the degree count, AND the final
@@ -726,53 +728,36 @@ def dbscan(df: DataFrame, id_col: str, features: Sequence[str], *,
              F.lit(0.0))
     pairs = (joined.filter(d2 <= eps * eps)
              .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-             .distinct().cache())
+             .distinct())
 
-    n_pairs = pairs.count()
-    if n_pairs <= 2_000_000:
+    tbl = fetch_local(pairs, width=2)
+    if tbl is not None:
         # the ε-pair list is O(pairs) scalars — run steps 2-4 (degree, core,
         # components, border) on the driver in one pass instead of ~10 small
         # distributed jobs whose scheduling overhead dwarfs the work
         from collections import defaultdict
 
         nbrs = defaultdict(set)
-        for r in pairs.collect():
-            nbrs[r.id_a].add(r.id_b)
-            nbrs[r.id_b].add(r.id_a)
+        for a, b in zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()):
+            nbrs[a].add(b)
+            nbrs[b].add(a)
         cores = {p for p, s in nbrs.items() if len(s) >= min_pts - 1}
-        parent = {p: p for p in cores}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for p in cores:
-            for q in nbrs[p]:
-                if q in cores and p < q:
-                    ra, rb = find(p), find(q)
-                    if ra != rb:
-                        if rb < ra:
-                            ra, rb = rb, ra
-                        parent[rb] = ra
-        lbl = {p: find(p) for p in cores}
+        lbl = min_label_components(
+            ((p, q) for p in cores for q in nbrs[p] if q in cores), cores)
         for p, s in nbrs.items():          # border points
             if p not in cores:
                 owners = [lbl[q] for q in s if q in cores]
                 if owners:
                     lbl[p] = min(owners)
-        spark = df.sparkSession
         dt = pts.schema["id"].dataType.simpleString()
-        lab_df = local_frame(spark, list(lbl.items()),
+        lab_df = local_frame(df.sparkSession, list(lbl.items()),
                              f"id {dt}, cluster_id {dt}")
         return (pts.select("id")
                 .join(lab_df, "id", "left")
                 .select(F.col("id").alias(id_col),
                         F.coalesce("cluster_id", F.lit(-1)).alias("cluster")))
 
+    pairs = pairs.cache()
     deg = (pairs.select(F.col("id_a").alias("id"))
            .unionByName(pairs.select(F.col("id_b").alias("id")))
            .groupBy("id").agg(F.count(F.lit(1)).alias("n_nbrs")))

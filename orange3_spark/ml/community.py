@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from orange3_spark.session import local_frame
+from orange3_spark.session import fetch_local, local_frame
 
 
 def knn_graph(df: DataFrame, id_col: str, cols: Sequence[str], *,
@@ -54,21 +54,19 @@ def label_propagation(edges: DataFrame, *, max_iters: int = 20) -> DataFrame:
 
     Each round: one shuffle (join on src) + one grouped count — the classic
     iterative-join pattern; ``localCheckpoint`` cuts the growing lineage so
-    round N doesn't recompute rounds 1..N-1.
+    round N doesn't recompute rounds 1..N-1.  A :func:`fetch_local`-sized
+    edge list (width 2) runs the identical rounds on the driver.
     """
-    # materialize the graph once — otherwise every round replays the whole
-    # upstream lineage (distance pair frame included)
-    edges = edges.localCheckpoint(eager=True)
-    n_edges = edges.count()
-    if n_edges <= 2_000_000:
+    tbl = fetch_local(edges.select("src", "dst"), width=2)
+    if tbl is not None:
         # edge list is O(edges) scalars — run the identical synchronous
         # rounds on the driver; job-scheduling overhead per distributed
         # round (~1 s) dwarfs this graph's actual work
         from collections import Counter, defaultdict
 
         adj = defaultdict(list)
-        for r in edges.collect():
-            adj[r.src].append(r.dst)
+        for u, v in zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()):
+            adj[u].append(v)
         # nodes = src ∪ dst (same universe as the distributed path): a node
         # appearing only as dst still needs a label, and dst labels must
         # exist before the first round reads them
@@ -94,11 +92,13 @@ def label_propagation(edges: DataFrame, *, max_iters: int = 20) -> DataFrame:
         rep: dict = {}
         for v, c in labels_d.items():
             rep[c] = min(rep.get(c, v), v)
-        spark = edges.sparkSession
         dt = edges.schema["src"].dataType.simpleString()
         return local_frame(
-            spark, [(v, rep[c]) for v, c in labels_d.items()],
+            edges.sparkSession, [(v, rep[c]) for v, c in labels_d.items()],
             f"id {dt}, community {dt}")
+    # materialize the graph once — otherwise every round replays the whole
+    # upstream lineage (distance pair frame included)
+    edges = edges.localCheckpoint(eager=True)
     nodes = (edges.select(F.col("src").alias("id"))
                   .union(edges.select(F.col("dst").alias("id")))
                   .distinct()).localCheckpoint(eager=True)
@@ -226,13 +226,12 @@ def _louvain_driver(rows, max_levels: int, max_iters: int) -> dict:
 
 
 def louvain(edges: DataFrame, *, weight_col: str = None,
-            max_levels: int = 10, max_iters: int = 20,
-            driver_max_edges: int = 2_000_000) -> DataFrame:
+            max_levels: int = 10, max_iters: int = 20) -> DataFrame:
     """Modularity-optimizing Louvain over a symmetric edge list →
     ``(id, community)``.
 
-    ≤ ``driver_max_edges`` (checked with a distributed count first): exact
-    sequential greedy on the driver — the edge list is O(edges) scalars,
+    A :func:`fetch_local`-sized edge list (width 3): exact sequential
+    greedy on the driver — the edge list is O(edges) scalars,
     and Louvain's sweep is inherently sequential, so this is both faster
     and exactly the reference algorithm.  Above it: synchronous
     parallel moves (each round = one join + grouped argmax of modularity
@@ -241,19 +240,18 @@ def louvain(edges: DataFrame, *, weight_col: str = None,
     contraction and repeat).  Deterministic on both paths.
     """
     w = F.col(weight_col) if weight_col else F.lit(1.0)
-    e0 = edges.select("src", "dst", w.cast("double").alias("w")) \
-              .localCheckpoint(eager=True)
-    if e0.count() <= driver_max_edges:
-        rows = [(r.src, r.dst, r.w) for r in e0.collect()]
+    e0 = edges.select("src", "dst", w.cast("double").alias("w"))
+    tbl = fetch_local(e0, width=3)
+    if tbl is not None:
+        rows = zip(*(c.to_pylist() for c in tbl.columns))
         lab = _louvain_driver(rows, max_levels, max_iters)
-        spark = edges.sparkSession
         dt = edges.schema["src"].dataType.simpleString()
-        return local_frame(
-            spark, sorted(lab.items()), f"id {dt}, community {dt}")
+        return local_frame(edges.sparkSession, sorted(lab.items()),
+                           f"id {dt}, community {dt}")
 
     # ---- distributed path: move phase + contraction per level
     mapping = None        # node -> community across levels
-    e = e0
+    e = e0.localCheckpoint(eager=True)
     for _level in range(max_levels):
         m2 = float(e.agg(F.sum("w")).first()[0])
         deg = e.groupBy("src").agg(F.sum("w").alias("k"))

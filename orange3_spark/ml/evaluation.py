@@ -19,7 +19,7 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from orange3_spark.session import fetch_local
+from orange3_spark.session import arrow_values, fetch_capped, fetch_local
 
 
 def with_fold(df: DataFrame, key: str, k: int, salt: str = "") -> DataFrame:
@@ -702,20 +702,24 @@ def shuffle_split_ols(df: DataFrame, key: str, features: Sequence[str],
     return out
 
 
+#: row bound of :func:`leave_one_out` (one model fit per row)
+LOO_MAX_ROWS = 2000
+
+
 def leave_one_out(df: DataFrame, key: str,
                   fit: Callable[[DataFrame], object],
-                  score: Callable[[DataFrame], float],
-                  *, max_rows: int = 2000) -> list[float]:
+                  score: Callable[[DataFrame], float]) -> list[float]:
     """Leave-one-out (testing.py:638-652): n fits of size n−1.  Inherently
     O(n) sequential model fits, so it is bounded — LOO on 100 TB is not a
     thing; use ``cross_validate`` (k-fold) or the closed-form leverage
-    trick for linear models instead.  Raises above ``max_rows``."""
-    n = df.count()
-    if n > max_rows:
+    trick for linear models instead.  Raises above
+    :data:`LOO_MAX_ROWS`."""
+    tbl = fetch_capped(df.select(key), LOO_MAX_ROWS)
+    if tbl is None:
         raise ValueError(
-            f"leave_one_out is O(n) model fits; n={n} > max_rows={max_rows}. "
+            f"leave_one_out is O(n) model fits; n > {LOO_MAX_ROWS}. "
             "Use cross_validate(k) at scale.")
-    keys = [r[0] for r in df.select(key).collect()]
+    keys = arrow_values(tbl.column(0))
     out = []
     for kv in keys:
         train = df.filter(F.col(key) != F.lit(kv))

@@ -19,7 +19,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from orange3_spark.session import local_frame
+from orange3_spark.session import fetch_capped, local_frame
+from orange3_spark.stats.distance import pair_matrix, row_distances
 
 MAX_POINTS = 20_000
 
@@ -39,34 +40,26 @@ _LW = {
 def linkage_from_pairs(pairs: DataFrame, *, method: str = "average",
                        id_a: str = "id_a", id_b: str = "id_b",
                        dist: str = "dist"):
-    """Collect a long-form distance frame and agglomerate on the driver.
+    """Fetch a long-form distance frame and agglomerate on the driver.
 
     Returns ``(ids, Z)``: the sorted point ids and a scipy-style linkage
     matrix ``Z`` (rows ``[left, right, height, size]``; cluster ``n+i`` is
     the cluster made at step ``i``).
     """
-    import numpy as np
-
-    # Guard BEFORE collecting: the pair frame is O(n²) rows, so the point
-    # count must be checked with a distributed aggregate first — collecting
-    # and then checking would already have pulled >n²/2 rows to the driver.
-    n_pairs = pairs.count()
-    if n_pairs > MAX_POINTS * (MAX_POINTS - 1) // 2:
+    # the fetch is the guard: it stops one row past the pair count of
+    # MAX_POINTS points, so no oversized O(n²) pair frame reaches here
+    cap = MAX_POINTS * (MAX_POINTS - 1) // 2
+    tbl = fetch_capped(pairs.select(id_a, id_b, dist), cap)
+    if tbl is None:
         raise ValueError(
-            f"{n_pairs} pair rows implies more than MAX_POINTS={MAX_POINTS} "
-            "points; cluster a KMeans summary instead")
-    rows = pairs.select(id_a, id_b, dist).collect()
-    ids = sorted({r[0] for r in rows} | {r[1] for r in rows})
+            f"more than {cap} pair rows implies more than "
+            f"MAX_POINTS={MAX_POINTS} points; cluster a KMeans summary "
+            "instead")
+    ids, D = pair_matrix(tbl, float("inf"))
     n = len(ids)
     if n > MAX_POINTS:
         raise ValueError(f"{n} points exceeds MAX_POINTS={MAX_POINTS}; "
                          "cluster a KMeans summary instead")
-    pos = {v: i for i, v in enumerate(ids)}
-    D = np.full((n, n), np.inf)
-    np.fill_diagonal(D, np.inf)
-    for r in rows:
-        i, j = pos[r[0]], pos[r[1]]
-        D[i, j] = D[j, i] = r[2]
     return ids, linkage_matrix(D, method=method)
 
 
@@ -239,28 +232,16 @@ def heatmap_order(df: DataFrame, id_col: str, cols: Sequence[str], *,
     driver (``MAX_POINTS``-guarded), where linkage + leaf traversal are
     O(model) work — identical contract to
     :func:`hierarchical_clustering`."""
-    import numpy as np
-
-    from orange3_spark.stats.distance import row_distances
-
     pairs = row_distances(df, id_col, cols, metric=metric,
                           normalize=normalize)
     if olo:
-        # guard BEFORE collecting (same contract as linkage_from_pairs)
-        cap = OLO_MAX_POINTS * (OLO_MAX_POINTS - 1) // 2
-        if pairs.limit(cap + 1).count() > cap:
+        tbl = fetch_capped(pairs, OLO_MAX_POINTS * (OLO_MAX_POINTS - 1) // 2)
+        if tbl is None:
             raise ValueError(f"pair frame implies more than "
                              f"OLO_MAX_POINTS={OLO_MAX_POINTS} points; "
                              "seriate a cluster summary instead")
-        rows = pairs.collect()
-        ids = sorted({r[0] for r in rows} | {r[1] for r in rows})
-        pos = {v: i for i, v in enumerate(ids)}
-        D = np.zeros((len(ids), len(ids)))
-        for r in rows:
-            D[pos[r[0]], pos[r[1]]] = D[pos[r[1]], pos[r[0]]] = r[2]
-        Dinf = D.copy()
-        np.fill_diagonal(Dinf, np.inf)
-        Z = linkage_matrix(Dinf, method=method)
+        ids, D = pair_matrix(tbl, 0.0)
+        Z = linkage_matrix(D, method=method)    # copies; inf diagonal
         order = optimal_leaf_order(ids, Z, D)
     else:
         ids, Z = linkage_from_pairs(pairs, method=method)
@@ -330,8 +311,6 @@ def hierarchical_clustering(df: DataFrame, id_col: str,
     """End-to-end: distributed pair distances → driver linkage → cut (into
     ``k`` clusters, or at height ``threshold``) → labels joined back as a
     DataFrame ``(id_col, cluster)``."""
-    from orange3_spark.stats.distance import row_distances
-
     pairs = row_distances(df, id_col, cols, metric=metric,
                           normalize=normalize)
     ids, Z = linkage_from_pairs(pairs, method=method)

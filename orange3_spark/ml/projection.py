@@ -25,7 +25,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from orange3_spark.session import arrow_matrix, fetch_local, local_frame
+from orange3_spark.session import (arrow_matrix, fetch_capped, fetch_local,
+                                   local_frame)
+from orange3_spark.stats.distance import pair_matrix, row_distances
 
 MAX_MDS_POINTS = 20_000
 
@@ -39,26 +41,21 @@ def mds(df: DataFrame, id_col: str, cols: Sequence[str], *,
     positive so the embedding is deterministic.
     """
     import numpy as np
-
-    from orange3_spark.stats.distance import row_distances
+    import pyarrow.compute as pc
 
     pairs = row_distances(df, id_col, cols, metric=metric)
-    # guard with a distributed count BEFORE collect — the pair frame is
-    # O(n²) rows, so a post-collect check cannot bound driver memory
-    n_pairs = pairs.count()
-    if n_pairs > MAX_MDS_POINTS * (MAX_MDS_POINTS - 1) // 2:
-        raise ValueError(f"{n_pairs} pair rows exceeds the "
+    cap = MAX_MDS_POINTS * (MAX_MDS_POINTS - 1) // 2
+    tbl = fetch_capped(pairs, cap)
+    if tbl is None:
+        raise ValueError(f"more than {cap} pair rows exceeds the "
                          f"MAX_MDS_POINTS={MAX_MDS_POINTS} bound; sample first")
-    rows = pairs.collect()
-    ids = sorted({r[0] for r in rows} | {r[1] for r in rows})
+    # squared per pair with C pow (Arrow's power kernel), not numpy's
+    # x*x: the two round apart on about 1 value in 3000
+    ids, D2 = pair_matrix(
+        tbl.set_column(2, "dist", pc.power(tbl.column(2), 2)), 0.0)
     n = len(ids)
     if n > MAX_MDS_POINTS:
         raise ValueError(f"{n} points exceeds MAX_MDS_POINTS; sample first")
-    pos = {v: i for i, v in enumerate(ids)}
-    D2 = np.zeros((n, n))
-    for r in rows:
-        i, j = pos[r[0]], pos[r[1]]
-        D2[i, j] = D2[j, i] = r[2] ** 2
     J = np.eye(n) - np.ones((n, n)) / n
     B = -0.5 * J @ D2 @ J
     w, v = np.linalg.eigh(B)
@@ -250,13 +247,13 @@ MAX_FREEVIZ_POINTS = 5_000
 
 def freeviz_fit(df: DataFrame, cols: Sequence[str], class_col: str, *,
                 p: int = 1, maxiter: int = 200, alpha: float = 0.1,
-                atol: float = 1e-5, discrete_class: bool = True,
-                max_rows: int = MAX_FREEVIZ_POINTS):
+                atol: float = 1e-5, discrete_class: bool = True):
     """FreeViz anchor optimization (``Orange/projection/freeviz.py:15-383``,
     Demšar et al. 2005): gradient descent on pairwise attract/repel forces.
     The force field is O(n²) in the fitted points, so the FIT runs on the
-    driver over a bounded table (count checked distributedly first — same
-    posture as the reference, which is wholly in-memory); the learned
+    driver over at most :data:`MAX_FREEVIZ_POINTS` fitted rows (fetched
+    with that cap; more raise — same posture as the reference, which is
+    wholly in-memory); the learned
     (P×2) anchor matrix then projects ANY amount of data row-locally via
     ``freeviz_transform``.  Deterministic: radial anchor init
     (``init_radial``), no RNG.
@@ -265,20 +262,18 @@ def freeviz_fit(df: DataFrame, cols: Sequence[str], class_col: str, *,
     """
     import numpy as np
 
-    n = df.count()
-    if n > max_rows:
+    tbl = fetch_capped(df.select(*cols, class_col).dropna(),
+                       MAX_FREEVIZ_POINTS)
+    if tbl is None:
         raise ValueError(
-            f"freeviz_fit is O(n²) in fitted rows; n={n} > {max_rows}. "
+            f"freeviz_fit is O(n²) in fitted rows; n > {MAX_FREEVIZ_POINTS}. "
             "Fit on a sample (operators.sample.sample_fixed) and project "
             "the full table with freeviz_transform.")
-    rows = df.select(*cols, class_col).dropna().collect()
-    # canonical row order (collect order is a partitioning artifact):
-    # sort by the full value tuple so the float ops below — and the
-    # oracle replay on a DuckDB fetch of the same table — are
-    # partition-independent
-    rows = sorted(rows, key=lambda r: tuple(r))
-    X = np.array([[float(r[c]) for c in cols] for r in rows])
-    yv = [r[class_col] for r in rows]
+    # canonical row order (fetch order is a partitioning artifact), so
+    # the float ops below match the oracle replay's
+    rows = sorted(zip(*(c.to_pylist() for c in tbl.columns)))
+    X = np.array([[float(v) for v in r[:-1]] for r in rows])
+    yv = [r[-1] for r in rows]
     return fit_freeviz_matrix(X, yv, p=p, maxiter=maxiter, alpha=alpha,
                               atol=atol, discrete_class=discrete_class)
 
@@ -372,44 +367,47 @@ def freeviz(df: DataFrame, cols: Sequence[str], class_col: str,
 
 # ----------------------------------------------------------------- t-SNE
 
+def _id_sorted_matrix(tbl):
+    """``(ids, X)`` of a fetched ``(id, array)`` or ``(id, col…)`` table,
+    ``X`` float64, rows in stable id order: fetch order is a property of
+    the scan, so this is what lets the oracle replay the embedding."""
+    import numpy as np
+    import pyarrow as pa
+
+    tbl = tbl.sort_by(tbl.column_names[0])      # a stable sort
+    if pa.types.is_list(tbl.column(1).type):
+        X = arrow_matrix(tbl.column(1), np.float64)
+    else:
+        X = np.column_stack([c.to_numpy().astype(np.float64)
+                             for c in tbl.columns[1:]])
+    return tbl.column(0).to_pylist(), X
+
+
 MAX_TSNE_POINTS = 2_000
 
 
 def tsne(df: DataFrame, id_col: str, cols: Sequence[str] = (), *,
          array_col: str | None = None, perplexity: float = 30.0,
-         n_iter: int = 300, learning_rate: float = 200.0,
-         max_rows: int = MAX_TSNE_POINTS) -> DataFrame:
+         n_iter: int = 300, learning_rate: float = 200.0) -> DataFrame:
     """Exact t-SNE (van der Maaten & Hinton 2008) on a bounded table —
     the reference wraps openTSNE (``Orange/projection/manifold.py``),
     driver-side in-memory too.  O(n²) affinities mean t-SNE is a
-    VISUALIZATION of a sample, never a 100 TB op: the count guard forces
-    that contract explicitly (sample upstream, then embed).
+    VISUALIZATION of a sample, never a 100 TB op: the fetch of at most
+    :data:`MAX_TSNE_POINTS` embedded rows forces that contract explicitly
+    (sample upstream, then embed).
 
     Deterministic: PCA initialization (no RNG), fixed iteration schedule
     (early exaggeration 12× for the first quarter, momentum 0.5→0.8).
     Returns ``(id, tsne_x, tsne_y)``.
     """
-    import numpy as np
-
-    n = df.count()
-    if n > max_rows:
+    sel = df.select(id_col, *([array_col] if array_col is not None
+                              else cols))
+    tbl = fetch_capped(sel.dropna(), MAX_TSNE_POINTS)
+    if tbl is None:
         raise ValueError(
-            f"tsne is O(n²); n={n} > {max_rows}. Sample first "
+            f"tsne is O(n²); n > {MAX_TSNE_POINTS}. Sample first "
             "(operators.sample.sample_fixed) and embed the sample.")
-    if array_col is not None:
-        rows = df.select(id_col, array_col).dropna().collect()
-    else:
-        rows = df.select(id_col, *cols).dropna().collect()
-    # canonical id order: collect() returns rows in partition order, which
-    # is a property of the scan, not the data — sorting by id makes the
-    # input matrix (and every float op downstream) partition-independent,
-    # which is what lets the oracle replay the embedding bit for bit
-    rows = sorted(rows, key=lambda r: r[0])
-    ids = [r[0] for r in rows]
-    if array_col is not None:
-        X = np.array([[float(x) for x in r[1]] for r in rows])
-    else:
-        X = np.array([[float(r[c]) for c in cols] for r in rows])
+    ids, X = _id_sorted_matrix(tbl)
     Y = fit_tsne_matrix(X, perplexity=perplexity, n_iter=n_iter,
                         learning_rate=learning_rate)
 
@@ -895,23 +893,18 @@ def fit_isomap_matrix(X, *, n_neighbors: int = 8, n_components: int = 2):
 
 
 def isomap(df: DataFrame, id_col: str, *, array_col: str,
-           n_neighbors: int = 8, n_components: int = 2,
-           max_rows: int = MAX_TSNE_POINTS) -> DataFrame:
-    """Isomap of a bounded table (the reference's Manifold Learning
-    widget wraps sklearn.Isomap, driver-side in-memory too —
-    ``Orange/widgets/unsupervised/owmanifoldlearning.py``).  O(n²)
-    geodesics → sample upstream, embed the sample; id-sorted collection
+           n_neighbors: int = 8, n_components: int = 2) -> DataFrame:
+    """Isomap of at most :data:`MAX_TSNE_POINTS` rows (the reference's
+    Manifold Learning widget wraps sklearn.Isomap, driver-side in-memory
+    too — ``Orange/widgets/unsupervised/owmanifoldlearning.py``).  O(n²)
+    geodesics → sample upstream, embed the sample; the id-sorted fetch
     makes the embedding a pure function of the data (replayable)."""
-    import numpy as np
-
-    n = df.count()
-    if n > max_rows:
-        raise ValueError(f"isomap is O(n^2)-O(n^3); n={n} > {max_rows}. "
+    tbl = fetch_capped(df.select(id_col, array_col).dropna(),
+                       MAX_TSNE_POINTS)
+    if tbl is None:
+        raise ValueError(f"isomap is O(n^2)-O(n^3); n > {MAX_TSNE_POINTS}. "
                          "Sample first and embed the sample.")
-    rows = sorted(df.select(id_col, array_col).dropna().collect(),
-                  key=lambda r: r[0])
-    ids = [r[0] for r in rows]
-    X = np.array([[float(x) for x in r[1]] for r in rows])
+    ids, X = _id_sorted_matrix(tbl)
     Y = fit_isomap_matrix(X, n_neighbors=n_neighbors,
                           n_components=n_components)
     dt = df.schema[id_col].dataType.simpleString()

@@ -34,7 +34,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from orange3_spark.session import fetch_local, local_frame
+from orange3_spark.session import fetch_capped, fetch_local, local_frame
 
 __all__ = ["Rule", "cn2_induce", "rules_to_dataframe", "cn2_predict",
            "contingency_cube", "cn2_unordered_induce", "cn2_sd_induce",
@@ -337,26 +337,32 @@ def cn2_predict(df: DataFrame, rules: Sequence[Rule],
 # quantization]] contract).
 
 
-def contingency_cube(df: DataFrame, attrs: Sequence[str], class_col: str, *,
-                     max_cells: int = 100_000) -> list:
+#: cell bound of :func:`contingency_cube`
+CN2_CUBE_MAX_CELLS = 100_000
+
+
+def contingency_cube(df: DataFrame, attrs: Sequence[str],
+                     class_col: str) -> list:
     """The (attr values…, class, count) cube — ONE distributed aggregation,
     the sufficient statistic for equality-selector rule induction.  Rows
     with a missing class are dropped (the reference's HasClass
     preprocessor); missing attribute values stay (a NULL never matches a
-    selector).  Raises if the cube exceeds ``max_cells`` — cube size is
-    Π|attr| × |classes|, so this guards against accidentally passing a
-    high-cardinality attribute, not against data volume."""
+    selector).  Raises if the cube exceeds :data:`CN2_CUBE_MAX_CELLS`
+    cells — cube size is Π|attr| × |classes|, so this guards against
+    accidentally passing a high-cardinality attribute, not against data
+    volume."""
     gb = (df.where(F.col(class_col).isNotNull())
           .groupBy(*[F.col(a).cast("string").alias(a) for a in attrs],
                    F.col(class_col).cast("string").alias("__cls"))
           .count())
-    rows = gb.limit(max_cells + 1).collect()
-    if len(rows) > max_cells:
+    tbl = fetch_capped(gb, CN2_CUBE_MAX_CELLS)
+    if tbl is None:
         raise ValueError(
-            f"contingency cube exceeds {max_cells} cells; rule induction "
-            "needs bounded-cardinality attributes — discretize first")
-    return [({a: r[a] for a in attrs}, r["__cls"], int(r["count"]))
-            for r in rows]
+            f"contingency cube exceeds {CN2_CUBE_MAX_CELLS} cells; rule "
+            "induction needs bounded-cardinality attributes — discretize "
+            "first")
+    return [(dict(zip(attrs, r)), r[-2], r[-1])
+            for r in zip(*(c.to_pylist() for c in tbl.columns))]
 
 
 def _match(vals: dict, sels: list) -> bool:

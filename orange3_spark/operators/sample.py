@@ -17,9 +17,11 @@ from typing import Mapping, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import arrow_values, fetch_capped
 
-#: Strata are class values — a bounded set by construction.  The probe
-#: fetches MAX_STRATA+1 distinct keys and fails loudly past the cap (the
+
+#: Strata are class values — a bounded set by construction.  The fetch
+#: stops at MAX_STRATA+1 distinct keys and fails loudly past the cap (the
 #: same 21-distinct-style guard as the discrete-type probe,
 #: preprocess/transform.py) instead of collecting an unbounded key list
 #: when someone stratifies on a continuous column by mistake.
@@ -31,14 +33,14 @@ def sample_fraction(df: DataFrame, fraction: float, *, seed: int = 42,
     """Bernoulli sample; stratified variant keeps the fraction per class
     (``sampleBy``)."""
     if stratify_by is not None:
-        keys = [r[0] for r in df.select(stratify_by).distinct()
-                .limit(MAX_STRATA + 1).collect()]
-        if len(keys) > MAX_STRATA:
+        tbl = fetch_capped(df.select(stratify_by).distinct(), MAX_STRATA)
+        if tbl is None:
             raise ValueError(
                 f"sample_fraction: stratify_by={stratify_by!r} has more "
                 f"than {MAX_STRATA} distinct values — strata must be a "
                 "categorical column; discretize a continuous key first")
-        return df.sampleBy(stratify_by, {k: fraction for k in keys}, seed=seed)
+        return df.sampleBy(stratify_by, dict.fromkeys(
+            arrow_values(tbl.column(0)), fraction), seed=seed)
     return df.sample(fraction=fraction, seed=seed)
 
 

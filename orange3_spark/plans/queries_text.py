@@ -364,8 +364,9 @@ SELECT id AS doc_id, min(lbl) AS cluster_id FROM walk GROUP BY id
 @query("q_dup_clusters", _DUP_CLUSTERS_SQL)
 def q_dup_clusters(spark, sf_dir):
     """Near-dup CLUSTERS: connected components over the Jaccard pair graph
-    (driver union-find under DRIVER_CC_MAX_EDGES — the path this data
-    size takes); the oracle is a recursive CTE."""
+    (driver union-find while the pair list is ``session.fetch_local``-
+    sized — the path this data size takes); the oracle is a recursive
+    CTE."""
     (docs,) = _t(spark, sf_dir, "documents")
     pairs = TD.jaccard_pairs(docs, n=3, threshold=0.2)
     return TD.dup_clusters(pairs)
@@ -374,14 +375,14 @@ def q_dup_clusters(spark, sf_dir):
 @query("q_dup_clusters_distributed", _DUP_CLUSTERS_SQL)
 def q_dup_clusters_distributed(spark, sf_dir):
     """Same clusters, but FORCING the distributed min-label-propagation
-    loop with pointer jumping (text/dedup.py:dup_clusters,
-    driver_max_edges=0) — the branch that actually runs past 2M edges
-    at 100 TB, hash-graded against the same recursive-CTE oracle so the
-    scale path has first-class correctness evidence, not just the
-    driver union-find shortcut."""
+    loop with pointer jumping (text/dedup.py:dup_clusters_distributed)
+    — the branch that actually runs past the fetch cap at 100 TB,
+    hash-graded against the same recursive-CTE oracle so the scale path
+    has first-class correctness evidence, not just the driver union-find
+    shortcut."""
     (docs,) = _t(spark, sf_dir, "documents")
     pairs = TD.jaccard_pairs(docs, n=3, threshold=0.2)
-    return TD.dup_clusters(pairs, driver_max_edges=0)
+    return TD.dup_clusters_distributed(pairs)
 
 
 @query("q_leakage_safe_split", """

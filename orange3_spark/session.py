@@ -300,6 +300,19 @@ LOCAL_CELLS = 4_000_000
 LOCAL_ROWS = 65_536
 
 
+def fetch_capped(df: DataFrame, cap: int):
+    """``df`` as one ``pyarrow.Table`` when it has at most ``cap`` rows,
+    else ``None``.
+
+    The fetch is ``limit(cap + 1).toArrow()``: ONE job, which runs the
+    limit in parallel over the partitions (``collect`` would scan them
+    in executeTake's sequential scale-up rounds), and no probe job
+    before it.  Arrow keeps NULL apart from NaN and int64 exact; a
+    pandas fetch does neither."""
+    tbl = df.limit(cap + 1).toArrow()
+    return None if tbl.num_rows > cap else tbl
+
+
 def fetch_local(df: DataFrame, width: "int | None" = None):
     """``df`` as one ``pyarrow.Table`` when it is small enough for a
     driver-local twin, else ``None`` — the caller then runs its
@@ -308,31 +321,32 @@ def fetch_local(df: DataFrame, width: "int | None" = None):
     ``width`` is the value count of a fixed-width row: the cap is
     ``LOCAL_CELLS // width`` rows.  Without it the cap is ``LOCAL_ROWS``
     rows and ``LOCAL_CELLS`` fetched cells, every array element counted
-    as one cell.
-
-    The fetch is ``limit(cap + 1).toArrow()``: ONE job, which runs the
-    limit in parallel over the partitions (``collect`` would scan them
-    in executeTake's sequential scale-up rounds).  Arrow keeps NULL
-    apart from NaN and int64 exact; a pandas fetch does neither."""
+    as one cell.  The fetch is :func:`fetch_capped`."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     cells = LOCAL_CELLS
     cap = LOCAL_ROWS if width is None else cells // max(width, 1)
-    tbl = df.limit(cap + 1).toArrow()
-    if tbl.num_rows > cap:
-        return None
-    if width is None:
-        n = 0
-        for col in tbl.columns:
-            t = col.type
-            if pa.types.is_list(t) or pa.types.is_large_list(t):
-                n += pc.sum(pc.list_value_length(col)).as_py() or 0
-            else:
-                n += len(col)
-        if n > cells:
-            return None
-    return tbl
+    tbl = fetch_capped(df, cap)
+    if tbl is None or width is not None:
+        return tbl
+    n = sum(pc.sum(pc.list_value_length(c)).as_py() or 0
+            if pa.types.is_list(c.type) or pa.types.is_large_list(c.type)
+            else len(c) for c in tbl.columns)
+    return None if n > cells else tbl
+
+
+def arrow_values(col) -> list:
+    """A fetched column as the Python values ``collect()`` gives: a
+    ``timestamp`` (UTC-aware in Arrow) becomes a ``Row``'s naive local
+    datetime, so a fetched key equals the caller's keys."""
+    import pyarrow as pa
+    from pyspark.sql.types import TimestampType
+
+    if not (pa.types.is_timestamp(col.type) and col.type.tz):
+        return col.to_pylist()
+    us = col.cast(pa.timestamp("us", col.type.tz)).cast(pa.int64())
+    return [TimestampType().fromInternal(v) for v in us.to_pylist()]
 
 
 def arrow_matrix(col, dtype):

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from orange3_spark.session import local_frame
+from orange3_spark.session import arrow_values, fetch_capped, local_frame
 
 
 def read_dst(spark: SparkSession, path: str,
@@ -113,35 +113,49 @@ def read_dst(spark: SparkSession, path: str,
     return out
 
 
+#: pair bound of the driver-side .dst writers
+DST_MAX_PAIRS = 2_000_000
+
+
+def _lower_triangle(pairs: DataFrame, id_a: str, id_b: str, dist_col: str,
+                    who: str, *, diagonal: bool):
+    """``(ids, tri)`` of a pair frame of at most :data:`DST_MAX_PAIRS`
+    rows: its sorted distinct ids (as ``collect()`` gives them) and the
+    lower triangle over them, with or without the ``diagonal``.  A NULL
+    distance is 0; an absent cell is 0 with the diagonal, else None."""
+    from pyspark.sql import functions as F
+
+    tbl = fetch_capped(pairs.select(id_a, id_b,
+                                    F.col(dist_col).cast("double")),
+                       DST_MAX_PAIRS)
+    if tbl is None:
+        raise ValueError(f"{who} is driver-side; > {DST_MAX_PAIRS} "
+                         "pairs. Use parquet for large matrices.")
+    a, b = arrow_values(tbl.column(0)), arrow_values(tbl.column(1))
+    ids = sorted(set(a) | set(b))
+    pos = {v: k for k, v in enumerate(ids)}
+    tri = [[0.0] * (i + 1) if diagonal else [None] * i
+           for i in range(len(ids))]
+    for u, v, d in zip(a, b, tbl.column(2).to_pylist()):
+        i, j = max(pos[u], pos[v]), min(pos[u], pos[v])
+        if diagonal or i != j:
+            tri[i][j] = 0.0 if d is None else d
+    return ids, tri
+
+
 def write_dst(pairs: DataFrame, path: str, *, id_a: str = "id_a",
               id_b: str = "id_b", dist_col: str = "dist", axis: int = 1,
-              labels: dict | None = None,
-              max_pairs: int = 2_000_000) -> None:
+              labels: dict | None = None) -> None:
     """Write a symmetric long-form distance frame to .dst
     (``distmatrix.py:359-388`` layout: header + row_labels + lower
     triangle).  Items are the distinct ids of both pair columns in
     sorted order; ``labels`` optionally maps id → label (default
     ``str(id)``).  Pairs may cover any subset — absent cells write 0,
     mirroring the reader's zero-padding.  Driver-side, bounded."""
-    from pyspark.sql import functions as F
-
-    sel = pairs.select(F.col(id_a).alias("_a"), F.col(id_b).alias("_b"),
-                       F.col(dist_col).cast("double").alias("_d"))
-    if sel.limit(max_pairs + 1).count() > max_pairs:
-        raise ValueError(f".dst writer is driver-side; > {max_pairs} "
-                         "pairs. Use parquet for large matrices.")
-    rows = sel.collect()
-    ids = sorted({r["_a"] for r in rows} | {r["_b"] for r in rows})
-    pos = {v: k for k, v in enumerate(ids)}
-    n = len(ids)
-    tri = [[0.0] * (i + 1) for i in range(n)]
-    for r in rows:
-        i, j = pos[r["_a"]], pos[r["_b"]]
-        if i < j:
-            i, j = j, i
-        tri[i][j] = float(r["_d"]) if r["_d"] is not None else 0.0
+    ids, tri = _lower_triangle(pairs, id_a, id_b, dist_col, ".dst writer",
+                               diagonal=True)
     with open(path, "w", encoding="utf-8") as fh:
-        fh.write(f"{n}\taxis={axis}\trow_labels\n")
+        fh.write(f"{len(ids)}\taxis={axis}\trow_labels\n")
         for i, v in enumerate(ids):
             lab = str(labels[v] if labels is not None else v)
             # .dst cannot represent blank or whitespace-padded labels:
@@ -274,8 +288,7 @@ def read_dst_xlsx(spark: SparkSession, path: str, *,
 
 def write_dst_xlsx(pairs: DataFrame, path: str, *, id_a: str = "id_a",
                    id_b: str = "id_b", dist_col: str = "dist",
-                   labels: dict | None = None,
-                   max_pairs: int = 2_000_000) -> None:
+                   labels: dict | None = None) -> None:
     """Write a symmetric long-form distance frame to .xlsx in the
     reference's layout (``_distmatrix_xlsx.py:write_matrix``): row
     labels in column A, strict lower triangle (no diagonal when it is
@@ -284,25 +297,10 @@ def write_dst_xlsx(pairs: DataFrame, path: str, *, id_a: str = "id_a",
     Numeric ids make ambiguous labels on read-back (this format has no
     header flags — reference contract); pass ``labels`` mapping ids to
     non-numeric strings when round-tripping matters."""
-    from pyspark.sql import functions as F
-
     from orange3_spark.sources.xlsx import write_grid
 
-    sel = pairs.select(F.col(id_a).alias("_a"), F.col(id_b).alias("_b"),
-                       F.col(dist_col).cast("double").alias("_d"))
-    if sel.limit(max_pairs + 1).count() > max_pairs:
-        raise ValueError(f".dst xlsx writer is driver-side; > {max_pairs} "
-                         "pairs. Use parquet for large matrices.")
-    rows = sel.collect()
-    ids = sorted({r["_a"] for r in rows} | {r["_b"] for r in rows})
-    pos = {v: k for k, v in enumerate(ids)}
-    tri = [[None] * i for i in range(len(ids))]   # strict lower triangle
-    for r in rows:
-        i, j = pos[r["_a"]], pos[r["_b"]]
-        if i < j:
-            i, j = j, i
-        if i != j:
-            tri[i][j] = float(r["_d"]) if r["_d"] is not None else 0.0
+    ids, tri = _lower_triangle(pairs, id_a, id_b, dist_col,
+                               ".dst xlsx writer", diagonal=False)
     grid = []
     for i, v in enumerate(ids):
         lab = labels[v] if labels is not None else str(v)

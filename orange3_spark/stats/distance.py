@@ -135,6 +135,22 @@ def _pair_frame(df: DataFrame, id_col: str, cols: Sequence[str]):
     return a.join(b, F.col("id_a") < F.col("id_b"))
 
 
+def pair_matrix(tbl, fill: float):
+    """``(ids, D)`` from a fetched long-form ``(id_a, id_b, dist)`` table:
+    the sorted distinct ids of both id columns and the dense symmetric
+    ``n × n`` distance matrix over them, ``fill`` wherever no pair gives
+    a value (the diagonal included).  Read column-wise in numpy."""
+    import numpy as np
+
+    a, b, d = (tbl.column(i).to_numpy() for i in range(3))
+    ids, pos = np.unique(np.concatenate([a, b]), return_inverse=True)
+    i, j = pos[:len(a)], pos[len(a):]
+    D = np.full((len(ids), len(ids)), fill, dtype=np.float64)
+    D[i, j] = d
+    D[j, i] = d
+    return ids.tolist(), D
+
+
 def row_distances(df: DataFrame, id_col: str, cols: Sequence[str], *,
                   metric: str = "euclidean", normalize: bool = False,
                   inv_cov=None) -> DataFrame:

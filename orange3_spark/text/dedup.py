@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from orange3_spark.session import local_frame
+from orange3_spark.session import fetch_local, local_frame
 from orange3_spark.text.analysis import tokens
 
 
@@ -376,75 +376,64 @@ def dedup_minhash(df: DataFrame, text_col: str = "text",
 
 # ------------------------------------------------------------- dup clusters
 
-#: Edge count under which connected components run as driver union-find —
-#: the edge list is O(pairs) scalars, not data; 2M edges ≈ tens of MB.
-DRIVER_CC_MAX_EDGES = 2_000_000
-
-
-def dup_clusters(pairs: DataFrame, *, max_iters: int = 20,
-                 driver_max_edges: int | None = None) -> DataFrame:
+def dup_clusters(pairs: DataFrame, *, max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs → ``(doc_id, cluster_id)``
     with cluster_id = min id in the component (the survivor each duplicate
-    group keeps).
+    group keeps).  Input: (id_a, id_b) pairs from any dedup operator.
 
-    ≤ ``driver_max_edges`` (default :data:`DRIVER_CC_MAX_EDGES`; pass 0
-    to force the distributed path, as the scale tests do) runs driver
-    union-find — the edge list is O(pairs) scalars.  Above it: iterative
-    min-label propagation WITH pointer jumping — each round every node
-    adopts the smallest label among itself and its neighbors, then
-    adopts its label's label (path halving), so convergence is
-    O(log diameter) rounds, not O(diameter) — on a 100 TB pair graph a
-    single chain-shaped component would otherwise dominate the round
-    count.  Each round is two joins + one groupBy — the standard way to
-    run small-fixpoint graph algorithms without a graph library.
-    Raises ``RuntimeError`` if the fixpoint is not reached in
-    ``max_iters`` (never returns silently-partial clusters).
-    Input: (id_a, id_b) pairs from any dedup operator.
-    """
-    # materialize the pair list ONCE before any branching: both the
-    # src→dst and dst→src directions (and every propagation round) derive
-    # from it, and the upstream pair computation (shingle self-join / LSH)
-    # is the expensive part — an unmaterialized union would execute it
-    # once per branch
+    A :func:`fetch_local`-sized pair list (width 2) runs driver
+    union-find, orders of magnitude fewer jobs than a distributed
+    fixpoint; past the cap :func:`dup_clusters_distributed` runs."""
+    tbl = fetch_local(pairs.select("id_a", "id_b"), width=2)
+    if tbl is None:
+        return dup_clusters_distributed(pairs, max_iters=max_iters)
+    comps = min_label_components(zip(tbl.column(0).to_pylist(),
+                                     tbl.column(1).to_pylist()))
+    dt = pairs.schema["id_a"].dataType.simpleString()
+    return local_frame(pairs.sparkSession, list(comps.items()),
+                       f"doc_id {dt}, cluster_id {dt}")
+
+
+def min_label_components(edges, nodes=()) -> dict:
+    """``{node: smallest node of its connected component}`` by driver
+    union-find over undirected ``(a, b)`` edges; ``nodes`` adds
+    vertices that may have no edge."""
+    parent = {v: v for v in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:              # min id wins as the representative
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {x: find(x) for x in parent}
+
+
+def dup_clusters_distributed(pairs: DataFrame, *,
+                             max_iters: int = 20) -> DataFrame:
+    """The distributed half of :func:`dup_clusters`: iterative min-label
+    propagation WITH pointer jumping — each round every node adopts the
+    smallest label among itself and its neighbors, then its label's
+    label (path halving), so a chain-shaped component converges in
+    O(log diameter) rounds, each two joins + one groupBy.  Raises
+    ``RuntimeError`` if the fixpoint is not reached in ``max_iters``
+    (never returns silently-partial clusters)."""
+    # materialize the pair list ONCE, eagerly: both directions and every
+    # round derive from it, and the upstream pair computation (shingle
+    # self-join / LSH) is the expensive part.  Eager, so AQE plans the
+    # first round over a materialized input (one job fewer at sf0.01)
     p2 = pairs.select(F.col("id_a").alias("src"),
-                      F.col("id_b").alias("dst")).cache()
-    n_edges = 2 * p2.count()
-    cutover = (DRIVER_CC_MAX_EDGES if driver_max_edges is None
-               else driver_max_edges)
-
-    if n_edges <= cutover:
-        # the edge list is O(pairs) *scalars* — union-find on the driver
-        # beats a multi-round distributed fixpoint by orders of magnitude
-        # in job overhead; the distributed loop below is the >2M-edge path
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        # union-find treats each pair as an undirected edge — no need to
-        # materialize the reversed direction at all on this path
-        for r in p2.collect():
-            a, b = r[0], r[1]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:              # min id wins as the representative
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        rows = [(x, find(x)) for x in parent]
-        spark = pairs.sparkSession
-        dt = pairs.schema["id_a"].dataType.simpleString()
-        p2.unpersist()
-        return local_frame(spark, rows, f"doc_id {dt}, cluster_id {dt}")
-
-    # both directions, derived from the MATERIALIZED pair cache — the
-    # union here only re-reads cached rows, and it drives every round
+                      F.col("id_b").alias("dst")).localCheckpoint(eager=True)
+    # both directions, derived from the MATERIALIZED pairs — the union
+    # here only re-reads checkpointed rows, and it drives every round
     edges = (p2.unionByName(p2.select(F.col("dst").alias("src"),
                                       F.col("src").alias("dst")))
              .cache())
@@ -486,7 +475,6 @@ def dup_clusters(pairs: DataFrame, *, max_iters: int = 20,
             converged = True
             break
     edges.unpersist()
-    p2.unpersist()
     if not converged:
         raise RuntimeError(
             f"dup_clusters did not converge in {max_iters} rounds "

@@ -19,6 +19,7 @@ from typing import Mapping, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orange3_spark.session import arrow_values, fetch_capped
 from orange3_spark.text import analysis as TA
 from orange3_spark.text import dedup as TD
 
@@ -213,9 +214,13 @@ def decontaminate(train: DataFrame, benchmark: DataFrame, *,
     return clean, contaminated
 
 
+#: distinct-source bound of :func:`mix_sources` / :func:`mix_temperature`
+MAX_SOURCES = 10_000
+
+
 def mix_sources(docs: DataFrame, target: Mapping[str, float], *,
                 id_col: str = "doc_id", source_col: str = "source",
-                salt: str = "mix", max_sources: int = 10_000) -> DataFrame:
+                salt: str = "mix") -> DataFrame:
     """Data mixing: deterministically sample the corpus toward TARGET
     source proportions — the "data mixture" step of an LLM training
     pipeline (not in the reference; weights like 50% web / 30% code /
@@ -230,17 +235,28 @@ def mix_sources(docs: DataFrame, target: Mapping[str, float], *,
     ``target`` are dropped.  Cost: one count aggregation + one
     scan-side filter; no shuffle of the kept rows.
 
-    The distinct-source probe is bounded (``max_sources``) with a loud
+    The source-count fetch is bounded (:data:`MAX_SOURCES`) with a loud
     failure, like the stratified sampler's strata guard.
     """
-    counts = {r[source_col]: int(r["n"]) for r in
-              (docs.groupBy(source_col)
-               .agg(F.count(F.lit(1)).alias("n"))
-               .limit(max_sources + 1).collect())}
-    if len(counts) > max_sources:
+    counts = _source_counts(docs, source_col, "mix_sources")
+    return _mix(docs, counts, target, id_col, source_col, salt)
+
+
+def _source_counts(docs: DataFrame, source_col: str, who: str) -> dict:
+    """``{source: row count}`` in one aggregation, fetched with the
+    :data:`MAX_SOURCES` cap; more distinct sources raise."""
+    tbl = fetch_capped(docs.groupBy(source_col)
+                       .agg(F.count(F.lit(1)).alias("n")), MAX_SOURCES)
+    if tbl is None:
         raise ValueError(
-            f"mix_sources: more than {max_sources} distinct sources — "
+            f"{who}: more than {MAX_SOURCES} distinct sources — "
             f"{source_col!r} must be a bounded category column")
+    return dict(zip(arrow_values(tbl.column(0)), tbl.column(1).to_pylist()))
+
+
+def _mix(docs: DataFrame, counts: dict, target: Mapping[str, float],
+         id_col: str, source_col: str, salt: str) -> DataFrame:
+    """Keep each source's rows under its :func:`mix_thresholds` hash."""
     thrs = mix_thresholds(counts, target)
     if not thrs:
         return docs.filter(F.lit(False))
@@ -317,21 +333,12 @@ def temperature_targets(counts: Mapping[str, int],
 
 def mix_temperature(docs: DataFrame, temperature: float, *,
                     id_col: str = "doc_id", source_col: str = "source",
-                    salt: str = "mixT",
-                    max_sources: int = 10_000) -> DataFrame:
+                    salt: str = "mixT") -> DataFrame:
     """Deterministic temperature mixing: measure the observed source
     counts (one aggregation), convert them to temperature-scaled target
     proportions, and keep rows by the same content-hash predicate as
     :func:`mix_sources` — one scan-side filter, no shuffle of the kept
     rows, fully SQL-replayable (``q_mix_temperature``)."""
-    counts = {r[source_col]: int(r["n"]) for r in
-              (docs.groupBy(source_col)
-               .agg(F.count(F.lit(1)).alias("n"))
-               .limit(max_sources + 1).collect())}
-    if len(counts) > max_sources:
-        raise ValueError(
-            f"mix_temperature: more than {max_sources} distinct sources "
-            f"— {source_col!r} must be a bounded category column")
-    return mix_sources(docs, temperature_targets(counts, temperature),
-                       id_col=id_col, source_col=source_col, salt=salt,
-                       max_sources=max_sources)
+    counts = _source_counts(docs, source_col, "mix_temperature")
+    return _mix(docs, counts, temperature_targets(counts, temperature),
+                id_col, source_col, salt)

@@ -412,12 +412,11 @@ JOB_BUDGETS = {
     # two ivf_knn builds (approx + exhaustive sides), each = Lloyd fit
     # jobs + centroid refresh collect + the final compare aggregate
     "q_ann_recall": 30,
-    # forced min-label-propagation loop: pair materialize + per-round
-    # localCheckpoint + convergence agg (2 propagation rounds + 1
-    # no-change round on this data; each round = a handful of AQE
-    # stage-jobs over the CACHED edge frame — the upstream jaccard
-    # self-join runs exactly once).  Measured 47 at sf0.01; a breach
-    # means a round started re-executing the pair derivation.
+    # dup_clusters_distributed, called directly: pair materialize +
+    # per-round localCheckpoint + convergence agg (2 propagation rounds +
+    # 1 no-change round on this data, each a handful of AQE stage-jobs
+    # over the CACHED edge frame; the jaccard self-join runs once).
+    # Measured 47 at sf0.01; a breach means a round re-derives the pairs.
     "q_dup_clusters_distributed": 55,
     # IVF fit jobs (Lloyd rounds + refresh collect) + the blocked
     # scoring pass (measured 14)
@@ -487,6 +486,14 @@ JOB_BUDGETS = {
     # IRLS: one mapInPandas scan per Newton iteration over the
     # persisted feature slice + final scoring (measured 13)
     "q_ml_logreg_irls": 17,
+    # one capped pair fetch, no probe job before it (measured in this
+    # audit at sf0.01, budget = measured + 25%); a breach means a probe
+    # job came back
+    "q_dup_clusters": 5,           # measured 4
+    "q_ml_dbscan": 15,             # measured 12
+    "q_ml_mds": 17,                # measured 13
+    "q_ml_hierarchical": 22,       # measured 17
+    "q_mix_temperature": 8,        # measured 6: one source-count fetch
 }
 
 

@@ -176,12 +176,13 @@ def test_louvain_karate_modularity(spark):
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, again.collect()))
 
 
-def test_louvain_distributed_path(spark):
+def test_louvain_distributed_path(spark, no_local_twins):
     from orange3_spark.ml.community import louvain
     clique = [(i, j) for i in range(5) for j in range(5) if i < j]
     pairs = clique + [(i + 5, j + 5) for i, j in clique] + [(0, 5)]
     edges = _sym_edges(spark, pairs)
-    out = louvain(edges, driver_max_edges=0)   # force the distributed path
+    with no_local_twins():                     # force the distributed path
+        out = louvain(edges)
     labels = {r.id: r.community for r in out.collect()}
     assert len({labels[i] for i in range(5)}) == 1
     assert len({labels[i] for i in range(5, 10)}) == 1

@@ -166,7 +166,7 @@ def test_log_loss_multiclass(spark):
     assert abs(got - expect) < 1e-12
 
 
-def test_validation_schemes(spark):
+def test_validation_schemes(spark, monkeypatch):
     class MeanModel:
         def __init__(self, mu):
             self.mu = mu
@@ -191,9 +191,9 @@ def test_validation_schemes(spark):
     loo = E.leave_one_out(small, "id", fit, lambda d: E.mse(d, label="y"))
     assert len(loo) == 6
     import pytest as _pytest
+    monkeypatch.setattr(E, "LOO_MAX_ROWS", 10)
     with _pytest.raises(ValueError):
-        E.leave_one_out(df, "id", fit, lambda d: E.mse(d, label="y"),
-                        max_rows=10)
+        E.leave_one_out(df, "id", fit, lambda d: E.mse(d, label="y"))
 
     tt = E.test_on_training_data(df, fit, lambda d: E.mse(d, label="y"))
     assert tt >= 0
@@ -300,7 +300,7 @@ def test_radviz_known_geometry(spark):
     assert out[(0.0, 0.0)] == (0.0, 0.0)   # zero-sum row -> origin
 
 
-def test_freeviz_separates_classes(spark):
+def test_freeviz_separates_classes(spark, monkeypatch):
     import numpy as np
     from orange3_spark.ml.projection import freeviz
 
@@ -321,9 +321,10 @@ def test_freeviz_separates_classes(spark):
     assert between > within     # classes pulled apart
 
     import pytest as _p
+    from orange3_spark.ml import projection
+    monkeypatch.setattr(projection, "MAX_FREEVIZ_POINTS", 10)
     with _p.raises(ValueError):
-        from orange3_spark.ml.projection import freeviz_fit
-        freeviz_fit(df, ["f1"], "y", max_rows=10)
+        projection.freeviz_fit(df, ["f1"], "y")
 
 
 def test_tsne_preserves_clusters(spark):

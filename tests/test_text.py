@@ -212,7 +212,7 @@ def test_dup_clusters_long_chain(spark):
     assert set(got.values()) == {0} and len(got) == 13
 
 
-def test_dup_clusters_distributed_branch(spark):
+def test_dup_clusters_distributed_branch(spark, no_local_twins):
     """Force the min-label-propagation loop (the path that runs at 100 TB)
     and pin it to the union-find result on a long chain + ≥2 components."""
     import pytest
@@ -226,13 +226,15 @@ def test_dup_clusters_distributed_branch(spark):
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     want = {r.doc_id: r.cluster_id
             for r in dup_clusters(pairs).collect()}           # union-find
-    got = {r.doc_id: r.cluster_id
-           for r in dup_clusters(pairs, driver_max_edges=0).collect()}
+    with no_local_twins():
+        got = {r.doc_id: r.cluster_id
+               for r in dup_clusters(pairs).collect()}
     assert got == want
     assert set(got.values()) == {0, 100, 200} and len(got) == 46
     # non-convergence raises loudly instead of returning partial clusters
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dup_clusters(pairs, driver_max_edges=0, max_iters=2)
+    with no_local_twins(), pytest.raises(RuntimeError,
+                                         match="did not converge"):
+        dup_clusters(pairs, max_iters=2)
 
 
 def test_redact(spark):
