@@ -31,6 +31,10 @@ TPCH_TABLES = (
 )
 
 
+#: the directory holding the ``orange3_spark`` package, for the workers
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _reap_stale_scratch(root: str, max_age_s: int = 6 * 3600) -> None:
     """Remove shuffle/blockmgr scratch left behind by DEAD sessions.
 
@@ -135,7 +139,18 @@ def get_spark(app_name: str = "orange3-spark", **extra_conf: str) -> SparkSessio
         # at 100 chars; plan-regression tests read these)
         .config("spark.sql.maxMetadataStringLength", "2000")
         .config("spark.ui.enabled", "false")
+        # Python workers fork from orange3_spark/_worker_daemon.py, which
+        # runs pyspark's daemon with a zipimport invalidation that re-reads
+        # an archive only when it changed: the stock one re-read
+        # pyspark.zip, py4j and the Spark jar (16 directories) before every
+        # task, 0.2-0.3 s of worker CPU each.  Workers import the daemon,
+        # and every UDF pickled by reference, from the package's parent
+        # directory, whatever the driver's cwd and PYTHONPATH.
+        .config("spark.python.daemon.module", "orange3_spark._worker_daemon")
     )
+    builder = builder.config("spark.executorEnv.PYTHONPATH", os.pathsep.join(
+        filter(None, [_PACKAGE_PARENT,
+                      extra_conf.pop("spark.executorEnv.PYTHONPATH", None)])))
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

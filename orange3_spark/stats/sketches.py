@@ -215,6 +215,8 @@ def hll_estimate(regs: DataFrame, *, group_by: str,
     # exact-integer scaled constant folded driver-side; the /s division
     # is the single float op on both engines
     c = alpha * m * m * float(1 << 53)
+    # one SQL literal: F.lit of the list made ~1,000 py4j calls (m = 256)
+    lc_table = F.expr(f"array({', '.join(map(str, hll_lc_table(m)))})")
     per_g = (regs.groupBy("g")
              .agg(F.count(F.lit(1)).alias("n_present"),
                   F.sum(F.expr("shiftleft(1L, 53 - mj)")).alias("s_present")))
@@ -232,7 +234,7 @@ def hll_estimate(regs: DataFrame, *, group_by: str,
         .withColumn("est_distinct",
                     F.when((F.col("n_zero") > 0)
                            & (F.col("est_raw") < F.lit(5 * m // 2)),
-                           F.element_at(F.lit(hll_lc_table(m)),
+                           F.element_at(lc_table,
                                         F.col("n_zero").cast("int")))
                     .otherwise(F.col("est_raw")).cast("long"))
         .drop("est_raw"))

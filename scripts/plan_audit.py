@@ -489,7 +489,8 @@ JOB_BUDGETS = {
     # one capped pair fetch, no probe job before it (measured in this
     # audit at sf0.01, budget = measured + 25%); a breach means a probe
     # job came back
-    "q_dup_clusters": 5,           # measured 4
+    "q_dup_clusters": 5,           # measured 4, whether or not
+                                   # q_dup_clusters_distributed ran first
     "q_ml_dbscan": 15,             # measured 12
     "q_ml_mds": 17,                # measured 13
     "q_ml_hierarchical": 22,       # measured 17

@@ -237,6 +237,16 @@ def test_dup_clusters_distributed_branch(spark, no_local_twins):
         dup_clusters(pairs, max_iters=2)
 
 
+def test_dup_clusters_query_leaves_no_cached_frame(spark, sf_dir):
+    """A cached frame that outlives its query holds storage memory for the
+    rest of the session and silently speeds up the next query reading it."""
+    import __spark_entry__ as E
+
+    spark.catalog.clearCache()
+    E.queries()["q_dup_clusters"](spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_redact(spark):
     from orange3_spark.text.analysis import redact
 
